@@ -93,24 +93,10 @@ private[operators] object IndexManifest {
 
   /** All committed versions, ascending; empty = legacy layout. Served
     * from the checkpoint + tail probes when the pointer is fresh (the
-    * fence guards exactness — see the fast-path notes below), so the
-    * mutator helpers that call this per commit attempt (column-mapping
-    * resolution, payload filtering) stay flat on a 50k-version table
-    * instead of paying a full manifest listing each. */
+    * fence guards exactness — see the fast-path notes below), otherwise
+    * from one manifest listing; no marker body is opened either way. */
   def committedVersions(spark: SparkSession, path: String): Seq[Long] =
-    fastMarkerLog(spark, path).map(_.committed)
-      .getOrElse(listedCommittedVersions(spark, path))
-
-  private def listedCommittedVersions(spark: SparkSession,
-      path: String): Seq[Long] = {
-    val dir = new Path(s"$path/manifest")
-    val f = fs(spark, path)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).map(_.getPath.getName)
-      .collect { case n if n.startsWith("v") && !n.contains("_") =>
-        n.stripPrefix("v").toLong }
-      .sorted.toSeq
-  }
+    markerLog(spark, path).committed
 
   /** Highest committed version; None = legacy (pre-manifest) layout.
     * Served pointer+probe when a checkpoint pointer exists (O(tail)
@@ -125,16 +111,35 @@ private[operators] object IndexManifest {
   /** Versions of `base` dirs present on disk: `base_v<N>` → N, ascending.
     * One listing RPC; used for payload, segment, and geometry resolution. */
   def diskVersions(spark: SparkSession, path: String,
-      base: String): Seq[Long] = {
-    val p = new Path(path)
-    val f = fs(spark, path)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).map(_.getPath.getName)
-      .collect { case n if n.startsWith(base + "_v") =>
-        n.stripPrefix(base + "_v") }
-      .collect { case n if n.nonEmpty && n.forall(_.isDigit) => n.toLong }
-      .sorted.toSeq
+      base: String): Seq[Long] =
+    rootFamilies(fs(spark, path), path).getOrElse(base, Nil)
+
+  /** `<family>_v<N>` → (family, N); None for any other name. The one
+    * parser of versioned dir and checkpoint names. */
+  private def familyVersion(name: String): Option[(String, Long)] = {
+    val i = name.lastIndexOf("_v")
+    val ver = if (i <= 0) "" else name.substring(i + 2)
+    if (ver.nonEmpty && ver.forall(_.isDigit))
+      ver.toLongOption.map(v => name.substring(0, i) -> v)
+    else None
   }
+
+  /** The versioned dirs on the root of `path` — family → ascending
+    * versions, committed or not — from one listing. */
+  private def rootFamilies(f: org.apache.hadoop.fs.FileSystem,
+      path: String): Map[String, Seq[Long]] = {
+    val p = new Path(path)
+    if (!f.exists(p)) Map.empty
+    else f.listStatus(p).toSeq
+      .flatMap(st => familyVersion(st.getPath.getName))
+      .groupBy(_._1).map { case (b, vs) => b -> vs.map(_._2).sorted }
+  }
+
+  /** The number the next mutation must use: past the head marker AND
+    * past every versioned dir on disk (see [[nextMutationVersion]]). */
+  private def nextAfter(head: Option[Long],
+      disk: Map[String, Seq[Long]]): Long =
+    (head.map(_ + 1).getOrElse(0L) +: disk.values.flatten.map(_ + 1).toSeq).max
 
   /** The payload version a composite `version` resolves to: the largest
     * COMMITTED `<base>_v<P>` ON DISK with P ≤ version (vacuum keeps this
@@ -144,22 +149,23 @@ private[operators] object IndexManifest {
     * enter any resolution (see [[nextMutationVersion]]). Indexes use
     * base `codes`; [[TableManifest]] data tables use `data`. */
   def payloadVersionAt(spark: SparkSession, path: String,
-      version: Long, base: String = "codes"): Option[Long] = {
-    val committed = committedVersions(spark, path).toSet
-    diskVersions(spark, path, base)
-      .filter(p => p <= version && committed.contains(p)).lastOption
-  }
+      version: Long, base: String = "codes"): Option[Long] =
+    resolve(spark, path).payloadAt(version, base)
 
   /** Delete-segment versions masking composite `version`:
     * payload(version) < D ≤ version, committed markers only (an orphan
     * segment from a crashed delete must never mask anything). */
   def segmentVersionsAt(spark: SparkSession, path: String,
-      version: Long): Seq[Long] = {
-    val p = payloadVersionAt(spark, path, version).getOrElse(-1L)
-    val committed = committedVersions(spark, path).toSet
-    diskVersions(spark, path, "tombstones")
-      .filter(d => d > p && d <= version && committed.contains(d))
-  }
+      version: Long): Seq[Long] =
+    resolve(spark, path).segmentsAt(version)
+
+  /** Marker kinds that commit a `<base>` payload. A table's `data_v<N>`
+    * is written only by snapshot-shaped commits ("" = pre-tagging), so
+    * a snapshot claim parked at a number a racing delete or append
+    * committed — the window before the loser takes it back — is never
+    * served as the payload. Index markers carry no kind. */
+  private def payloadKinds(base: String): Option[Set[String]] =
+    if (base == "data") Some(Set("", "snapshot")) else None
 
   /** The version number the NEXT mutation must use: past the current
     * marker AND past every versioned dir on disk (payloads, segments,
@@ -169,21 +175,8 @@ private[operators] object IndexManifest {
     * (a half-built payload served, a dead delete masking live rows, a
     * stale quantizer decoding fresh codes). */
   def nextMutationVersion(spark: SparkSession, path: String): Long = {
-    val afterMarker = currentVersion(spark, path).map(_ + 1).getOrElse(0L)
-    val p = new Path(path)
-    val f = fs(spark, path)
-    if (!f.exists(p)) return afterMarker
-    val afterDisk = f.listStatus(p).map(_.getPath.getName)
-      .flatMap { n =>
-        val i = n.lastIndexOf("_v")
-        if (i <= 0) None
-        else {
-          val ver = n.substring(i + 2)
-          if (ver.nonEmpty && ver.forall(_.isDigit)) Some(ver.toLong + 1)
-          else None
-        }
-      }
-    (afterMarker +: afterDisk.toSeq).max
+    val head = currentVersion(spark, path)
+    nextAfter(head, rootFamilies(fs(spark, path), path))
   }
 
   /** Current live payload dir. */
@@ -206,48 +199,51 @@ private[operators] object IndexManifest {
       .map(w => s"$path/${name}_v$w").getOrElse(s"$path/$name")
   }
 
-  /** One-shot composite resolution: the two listing RPCs (manifest dir +
-    * index root) captured once, every version question answered from the
-    * snapshot. The SERVING paths use this — the helper-per-question form
-    * re-lists the filesystem a dozen times per probe, and on the object
-    * stores the docs target, listing is the expensive RPC. Mutators keep
-    * the always-fresh helpers (their loops must see concurrent commits). */
-  final case class Resolved(committed: Seq[Long],
-      disk: Map[String, Seq[Long]]) {
-    private val committedSet = committed.toSet
+  /** One resolved state of a manifest: the [[MarkerLog]] (committed set,
+    * marker bodies on demand) and the root listing of versioned dirs,
+    * read in that order, so every committed version's dirs are in the
+    * listing (they are renamed into place before their marker).
+    *
+    * Freshness rule: a Resolved answers questions about versions at or
+    * below the head it read, and those answers never go stale — marker
+    * bodies are immutable and a committed version's dirs stay until
+    * vacuum. So an operation resolves once and asks it every version
+    * question; a mutator resolves again at the top of each commit
+    * attempt. Claim decisions never come from it: they stay direct calls
+    * ([[currentVersion]] head re-checks, [[renameExclusive]], and
+    * [[tryCommitTagged]]'s tail-only check). */
+  final case class Resolved(log: MarkerLog, disk: Map[String, Seq[Long]]) {
+    def committed: Seq[Long] = log.committed
     def current: Option[Long] = committed.lastOption
+    /** The number the next mutation must claim (see
+      * [[nextMutationVersion]]). */
+    def nextVersion: Long = nextAfter(current, disk)
+
+    /** The honoring rule, newest first: committed `<family>_v<N>` dirs
+      * with `after` < N ≤ `version` whose marker kind `kinds` accepts
+      * (None accepts every kind without reading a body). A dir whose
+      * number no marker committed — or one committed by a mutation of
+      * another kind — is an orphan and never honored. Bodies are read as
+      * the iterator advances. */
+    def honored(family: String, version: Long,
+        kinds: Option[Set[String]] = None,
+        after: Long = -1L): Iterator[Long] =
+      disk.getOrElse(family, Nil).reverseIterator.filter(n =>
+        n <= version && n > after && log.committedSet(n) &&
+          kinds.forall(_(log.infoAt(n).kind)))
+
     def payloadAt(version: Long, base: String = "codes"): Option[Long] =
-      disk.getOrElse(base, Nil)
-        .filter(p => p <= version && committedSet.contains(p)).lastOption
-    def segmentsAt(version: Long, base: String = "codes"): Seq[Long] = {
-      val p = payloadAt(version, base).getOrElse(-1L)
-      disk.getOrElse("tombstones", Nil)
-        .filter(d => d > p && d <= version && committedSet.contains(d))
-    }
+      honored(base, version, payloadKinds(base)).nextOption()
+    def segmentsAt(version: Long, base: String = "codes"): Seq[Long] =
+      honored("tombstones", version,
+        after = payloadAt(version, base).getOrElse(-1L)).toSeq.reverse
     def artifactVersionAt(name: String, version: Long): Option[Long] =
-      disk.getOrElse(name, Nil)
-        .filter(w => w <= version && committedSet.contains(w)).lastOption
+      honored(name, version).nextOption()
   }
 
   def resolve(spark: SparkSession, path: String): Resolved = {
-    val committed = committedVersions(spark, path)
-    val p = new Path(path)
-    val f = fs(spark, path)
-    val disk: Map[String, Seq[Long]] =
-      if (!f.exists(p)) Map.empty
-      else f.listStatus(p).map(_.getPath.getName).toSeq
-        .flatMap { n =>
-          val i = n.lastIndexOf("_v")
-          if (i <= 0) None
-          else {
-            val ver = n.substring(i + 2)
-            if (ver.nonEmpty && ver.forall(_.isDigit))
-              Some(n.substring(0, i) -> ver.toLong)
-            else None
-          }
-        }
-        .groupBy(_._1).map { case (b, vs) => b -> vs.map(_._2).sorted }
-    Resolved(committed, disk)
+    val log = markerLog(spark, path)
+    Resolved(log, rootFamilies(fs(spark, path), path))
   }
 
   /** Version a fresh build() must write and then commit: 0 on a virgin
@@ -281,8 +277,10 @@ private[operators] object IndexManifest {
     * the loop below) — only a persistently-empty marker reads legacy. */
   final case class MarkerInfo(wm: Long, uwm: Long, kind: String)
 
-  private lazy val markerLog =
-    org.slf4j.LoggerFactory.getLogger(getClass)
+  /** The record of an absent or pre-watermark marker. */
+  private val LegacyInfo = MarkerInfo(Long.MaxValue, -1L, "")
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** (path, version) markers CONFIRMED legacy-empty (empty body AND
     * placed longer ago than any placement window) — that resolution is
@@ -305,9 +303,9 @@ private[operators] object IndexManifest {
       version: Long): MarkerInfo = {
     val f = fs(spark, path)
     val m = new Path(s"$path/manifest/v$version")
-    if (!f.exists(m)) return MarkerInfo(Long.MaxValue, -1L, "")
+    if (!f.exists(m)) return LegacyInfo
     if (legacyEmptyMarkers.contains(s"$path#$version"))
-      return MarkerInfo(Long.MaxValue, -1L, "")
+      return LegacyInfo
     // a marker is immutable once placed, but the PLACEMENT itself has a
     // millisecond window on checksummed local filesystems: rename moves
     // the data file and its .crc as two operations, so a reader landing
@@ -353,7 +351,7 @@ private[operators] object IndexManifest {
         else done = true
       } catch {
         case _: java.io.FileNotFoundException if !f.exists(m) =>
-          return MarkerInfo(Long.MaxValue, -1L, "")
+          return LegacyInfo
         case _: org.apache.hadoop.fs.ChecksumException if attempt < 8 =>
           Thread.sleep(10L * attempt)
         case _: java.io.EOFException if attempt < 8 =>
@@ -381,7 +379,7 @@ private[operators] object IndexManifest {
       if (ageMs > EmptyMarkerLegacyAgeMs)
         legacyEmptyMarkers.add(s"$path#$version")
       else
-        markerLog.warn(
+        log.warn(
           s"marker $path/manifest/v$version still empty after $attempt " +
             s"reads (~280 ms) and only $ageMs ms old: treating as the " +
             "LEGACY empty record (wm=MaxValue, uwm=-1); if a writer is " +
@@ -401,7 +399,7 @@ private[operators] object IndexManifest {
         kv.get(k).flatMap(_.toLongOption).getOrElse(dflt)
       MarkerInfo(longOf("wm", Long.MaxValue), longOf("uwm", -1L),
         kv.getOrElse("kind", ""))
-    } else MarkerInfo(Long.MaxValue, -1L, "")
+    } else LegacyInfo
   }
 
   /** Watermark recorded in `version`'s marker: the highest KEYED/low-range
@@ -434,13 +432,51 @@ private[operators] object IndexManifest {
   // <= 0 disables) rewrites the checkpoint from the previous one plus
   // the tail, then prunes superseded checkpoint files.
 
-  /** Every committed marker's body and mtime, resolved in O(tail) file
-    * opens (see above). `committed` ascending; `mtime` from the live
-    * listing (commit times — the TIMESTAMP AS OF axis). */
-  final case class MarkerLog(committed: Seq[Long],
-      info: Map[Long, MarkerInfo], mtime: Map[Long, Long]) {
+  /** Every committed version (ascending) and its mtime (commit times —
+    * the TIMESTAMP AS OF axis), plus each committed marker's body on
+    * demand. A body is read on its first `infoAt` and memoized — from
+    * the checkpoint when that holds it (one open serves them all),
+    * otherwise its own marker file — so a log never opens a body nobody
+    * asked for; marker bodies are immutable, so a memoized one never
+    * goes stale. Uncommitted versions read the legacy record. */
+  final class MarkerLog private[IndexManifest] (val committed: Seq[Long],
+      val mtime: Map[Long, Long], checkpointed: () => Map[Long, MarkerInfo],
+      read: Long => MarkerInfo) {
+    val committedSet: Set[Long] = mtime.keySet
+    private lazy val fromCheckpoint = checkpointed()
+    private val loaded = scala.collection.mutable.Map.empty[Long, MarkerInfo]
     def infoAt(v: Long): MarkerInfo =
-      info.getOrElse(v, MarkerInfo(Long.MaxValue, -1L, ""))
+      if (!committedSet(v)) LegacyInfo
+      else fromCheckpoint.getOrElse(v,
+        loaded.synchronized(loaded.getOrElseUpdate(v, read(v))))
+  }
+
+  /** A checkpoint body: the fence generation it recorded, and per
+    * version its marker body and mtime. Lines are
+    * `<version>:<wm>:<uwm>:<mtime>:<kind>` — kind last (it may be empty
+    * on pre-tagging markers). */
+  private def parseCheckpoint(
+      body: String): (Long, Map[Long, MarkerInfo], Map[Long, Long]) = {
+    var fence = 0L
+    val infos = scala.collection.mutable.Map.empty[Long, MarkerInfo]
+    val mtimes = scala.collection.mutable.Map.empty[Long, Long]
+    body.linesIterator.foreach { l =>
+      if (l.startsWith("#fence="))
+        fence = l.stripPrefix("#fence=").trim.toLongOption.getOrElse(0L)
+      else l.split(":", 5) match {
+        case Array(v, wm, uwm, mt, kind) =>
+          for {
+            vv <- v.toLongOption
+            w <- wm.toLongOption
+            u <- uwm.toLongOption
+          } {
+            infos(vv) = MarkerInfo(w, u, kind)
+            mtimes(vv) = mt.toLongOption.getOrElse(0L)
+          }
+        case _ =>
+      }
+    }
+    (fence, infos.toMap, mtimes.toMap)
   }
 
   // ---- fence + pointer: listing-free read planning ------------------------
@@ -536,19 +572,8 @@ private[operators] object IndexManifest {
     * one-entry-per-commit), which is how tail probes skip number gaps
     * without a manifest listing. */
   private def rootFamilyVersions(f: org.apache.hadoop.fs.FileSystem,
-      path: String): Set[Long] = {
-    val p = new Path(path)
-    if (!f.exists(p)) Set.empty
-    else f.listStatus(p).map(_.getPath.getName).flatMap { n =>
-      val i = n.lastIndexOf("_v")
-      if (i <= 0) None
-      else {
-        val ver = n.substring(i + 2)
-        if (ver.nonEmpty && ver.forall(_.isDigit)) Some(ver.toLong)
-        else None
-      }
-    }.toSet
-  }
+      path: String): Set[Long] =
+    rootFamilies(f, path).values.flatten.toSet
 
   /** Probe committed markers forward from `from` (exclusive): each
     * version's marker is getFileStatus'd directly; gaps with a root
@@ -596,57 +621,39 @@ private[operators] object IndexManifest {
   }
 
   /** Checkpoint-plus-probes marker log; None = any ingredient missing
-    * or stale (the caller falls back to the full listing). */
+    * or stale (the caller falls back to the full listing). Tail bodies
+    * are read on demand, like every body of a [[MarkerLog]]. */
   private def fastMarkerLog(spark: SparkSession,
       path: String): Option[MarkerLog] = {
     val f = fs(spark, path)
-    val ptr = readPointer(f, path).map(_._1)
-    if (ptr.isEmpty) return None
-    val c = ptr.get
+    val c = readPointer(f, path).map(_._1).getOrElse(return None)
     val body = readSmall(f, new Path(s"$path/manifest/ckpt_v$c"))
-    if (body.isEmpty) return None
-    var ckptFence = 0L
-    val infos = scala.collection.mutable.Map.empty[Long, MarkerInfo]
-    val mtimes = scala.collection.mutable.Map.empty[Long, Long]
-    body.get.linesIterator.foreach { l =>
-      if (l.startsWith("#fence="))
-        ckptFence = l.stripPrefix("#fence=").trim.toLongOption.getOrElse(0L)
-      else l.split(":", 5) match {
-        case Array(v, wm, uwm, mt, kind) =>
-          for {
-            vv <- v.toLongOption
-            w <- wm.toLongOption
-            u <- uwm.toLongOption
-          } {
-            infos(vv) = MarkerInfo(w, u, kind)
-            mtimes(vv) = mt.toLongOption.getOrElse(0L)
-          }
-        case _ =>
-      }
-    }
+      .getOrElse(return None)
+    val (ckptFence, infos, mtimes) = parseCheckpoint(body)
     if (!infos.contains(c)) return None // pointer past the ckpt body
     val tail = probeTail(f, path, c, rootFamilyVersions(f, path))
-    if (tail.isEmpty) return None
-    tail.get.foreach { case (v, mt) =>
-      infos(v) = markerInfoAt(spark, path, v)
-      mtimes(v) = mt
-    }
+      .getOrElse(return None)
     // fence LAST: a reclaim that started anywhere before this read
     // shows a moved (or torn) generation and refuses the fast path
     if (!fenceGen(f, path).contains(ckptFence)) return None
-    Some(MarkerLog(infos.keys.toSeq.sorted, infos.toMap, mtimes.toMap))
+    val mtime = mtimes ++ tail
+    Some(new MarkerLog(mtime.keys.toSeq.sorted, mtime, () => infos,
+      markerInfoAt(spark, path, _)))
   }
 
   def markerLog(spark: SparkSession, path: String): MarkerLog =
     fastMarkerLog(spark, path)
       .getOrElse(listedMarkerLog(spark, path))
 
+  /** The marker log from one manifest listing: existence and mtimes from
+    * the listing; bodies from the newest checkpoint at-or-below the head
+    * (read once, on the first body asked for) or, for versions it does
+    * not hold, their own marker files. */
   private def listedMarkerLog(spark: SparkSession,
       path: String): MarkerLog = {
     val f = fs(spark, path)
     val dir = new Path(s"$path/manifest")
-    if (!f.exists(dir)) return MarkerLog(Seq.empty, Map.empty, Map.empty)
-    val sts = f.listStatus(dir)
+    val sts = if (f.exists(dir)) f.listStatus(dir).toSeq else Nil
     val markers: Map[Long, Long] = sts.flatMap { st =>
       val n = st.getPath.getName
       if (n.startsWith("v") && !n.contains("_"))
@@ -655,47 +662,17 @@ private[operators] object IndexManifest {
     }.toMap
     val committed = markers.keys.toSeq.sorted
     val head = committed.lastOption.getOrElse(-1L)
-    val ckpt = sts.map(_.getPath.getName)
-      .collect { case n if n.startsWith("ckpt_v") =>
-        n.stripPrefix("ckpt_v") }
-      .collect { case n if n.nonEmpty && n.forall(_.isDigit) => n.toLong }
-      .filter(_ <= head).sorted.lastOption
-    val fromCkpt: Map[Long, MarkerInfo] = ckpt match {
-      case None => Map.empty
-      case Some(c) =>
-        scala.util.Try {
-          // one buffered read of the whole file (a 50k-version
-          // checkpoint is ~2 MB; char-iterating Source costs ~1 s
-          // there, readFully is milliseconds)
-          val cp = new Path(s"$path/manifest/ckpt_v$c")
-          val len = f.getFileStatus(cp).getLen.toInt
-          val buf = new Array[Byte](len)
-          val in = f.open(cp)
-          try in.readFully(buf) finally in.close()
-          val body = new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-          body.linesIterator.flatMap { l =>
-            // <version>:<wm>:<uwm>:<mtime>:<kind> — kind last (it may
-            // be empty on pre-tagging markers); mtime is carried for
-            // inspection but the LIVE listing's mtimes are served
-            l.split(":", 5) match {
-              case Array(v, wm, uwm, _, kind) =>
-                for {
-                  vv <- v.toLongOption
-                  w <- wm.toLongOption
-                  u <- uwm.toLongOption
-                } yield vv -> MarkerInfo(w, u, kind)
-              case _ => None
-            }
-          }.toMap
-        }.getOrElse(Map.empty) // unreadable checkpoint = no cache
-    }
-    // bodies come from the checkpoint ONLY for versions the live
-    // listing still shows; the tail — and any version the checkpoint
-    // missed — reads its marker file directly
-    val cached = fromCkpt.filter { case (v, _) => markers.contains(v) }
-    val missing = committed.filterNot(cached.contains)
-    val tail = missing.map(v => v -> markerInfoAt(spark, path, v)).toMap
-    MarkerLog(committed, cached ++ tail, markers)
+    val ckpt = sts.flatMap(st => familyVersion(st.getPath.getName))
+      .collect { case ("ckpt", c) if c <= head => c }.maxOption
+    // one buffered read of the whole file (a 50k-version checkpoint is
+    // ~2 MB); an unreadable checkpoint is no cache. The live listing's
+    // mtimes are served, not the ones the checkpoint carries.
+    def fromCheckpoint(): Map[Long, MarkerInfo] = ckpt
+      .flatMap(c => readSmall(f, new Path(s"$path/manifest/ckpt_v$c")))
+      .map(b => parseCheckpoint(b)._2)
+      .getOrElse(Map.empty)
+    new MarkerLog(committed, markers, () => fromCheckpoint(),
+      markerInfoAt(spark, path, _))
   }
 
   /** Write `manifest/ckpt_v<head>` (best-effort: a loss is a cache
@@ -754,13 +731,9 @@ private[operators] object IndexManifest {
         val po = f.create(new Path(s"$path/manifest/_last_ckpt"), true)
         try po.writeBytes(s"$head\n#fence=$gen") finally po.close()
       }
-      val listed = f.listStatus(new Path(s"$path/manifest"))
-        .map(_.getPath.getName)
-      val all = listed
-        .collect { case n if n.startsWith("ckpt_v") =>
-          n.stripPrefix("ckpt_v") }
-        .collect { case n if n.nonEmpty && n.forall(_.isDigit) => n.toLong }
-        .sorted
+      val all = f.listStatus(new Path(s"$path/manifest")).toSeq
+        .flatMap(st => familyVersion(st.getPath.getName))
+        .collect { case ("ckpt", c) => c }.sorted
       val pruned = all.dropRight(2).map { c =>
         val p = new Path(s"$path/manifest/ckpt_v$c")
         f.delete(p, false); p
@@ -871,12 +844,12 @@ private[operators] object IndexManifest {
       payloadBase: String = "codes", retainMs: Long = 0L,
       pinned: Set[Long] = Set.empty): Seq[Long] = {
     require(keep >= 1)
-    val vs = committedVersions(spark, path)
+    val r = resolve(spark, path)
+    val vs = r.committed
     if (vs.isEmpty) return Nil
     val keepSet = keepTail(spark, path, vs, keep, retainMs)
-    val cutoff = payloadVersionAt(spark, path, keepSet.min, payloadBase)
-      .getOrElse(keepSet.min)
-    val protectedVers = protectedBy(spark, path, pinned, payloadBase, vs)
+    val cutoff = r.payloadAt(keepSet.min, payloadBase).getOrElse(keepSet.min)
+    val protectedVers = protectedBy(spark, path, r, pinned, payloadBase)
     vs.filter(v => v < cutoff && !protectedVers(v))
   }
 
@@ -900,54 +873,33 @@ private[operators] object IndexManifest {
   /** The version numbers `pinned` versions resolve THROUGH (payload,
     * masking segments, newest geometry per family, own markers) — what
     * vacuum must keep per pin. */
-  private def protectedBy(spark: SparkSession, path: String,
-      pinned: Set[Long], payloadBase: String,
-      vs: Seq[Long]): Set[Long] = {
-    val f = fs(spark, path)
-    val families = f.listStatus(new Path(path)).map(_.getPath.getName)
-      .flatMap { n =>
-        val i = n.lastIndexOf("_v")
-        if (i <= 0) None
-        else {
-          val (base, ver) = (n.substring(0, i), n.substring(i + 2))
-          if (ver.nonEmpty && ver.forall(_.isDigit))
-            Some(base -> ver.toLong)
-          else None
-        }
-      }
-    def isSegmentBase(b: String) =
-      b == "tombstones" || b == "deletes" || b == "eqdeletes"
-    val committedSet = vs.toSet
-    pinned.filter(committedSet).flatMap { p =>
-      val pay = payloadVersionAt(spark, path, p, payloadBase)
-      val segs = families.collect {
-        case (b, d) if isSegmentBase(b) &&
-          d > pay.getOrElse(-1L) && d <= p && committedSet(d) => d
-      }
+  private def protectedBy(spark: SparkSession, path: String, r: Resolved,
+      pinned: Set[Long], payloadBase: String): Set[Long] =
+    pinned.filter(r.log.committedSet).flatMap { p =>
+      val pay = r.payloadAt(p, payloadBase)
+      val segs = r.disk.keys.filter(isSegmentBase).flatMap(b =>
+        r.honored(b, p, after = pay.getOrElse(-1L)))
       // update-keyspace batches (MoR UPDATE/MERGE replacement rows)
       // are legitimized by THEIR OWN marker's kind — an insert-only
       // merge carries no segment dir, so without this its marker would
       // be reclaimed and the pinned read would silently drop the
-      // merge's rows (updateVersionsAt filters on the marker kind)
+      // merge's rows (a table View serves an update batch only when
+      // its marker kind is an update or merge)
       val updBatches = pay.toSeq.flatMap { pv =>
-        val dir = new Path(s"$path/${payloadBase}_v$pv")
-        if (!f.exists(dir)) Nil
-        else f.listStatus(dir).map(_.getPath.getName)
-          .collect { case n if n.startsWith("__batch=") =>
-            n.stripPrefix("__batch=").toLong }
-          .filter(_ >= TableManifest.UpdateBase)
-          .map(_ - TableManifest.UpdateBase)
-          .filter(d => d > pv && d <= p && committedSet(d))
+        TableManifest.updateVersionsIn(
+            TableManifest.batchIds(spark, s"$path/${payloadBase}_v$pv"))
+          .filter(d => d > pv && d <= p && r.log.committedSet(d))
       }
-      val geom = families.filter { case (b, _) =>
-        !isSegmentBase(b) && b != payloadBase }
-        .groupBy(_._1).flatMap { case (_, es) =>
-          es.map(_._2).filter(w => w <= p && committedSet(w))
-            .sorted.lastOption
-        }
+      val geom = r.disk.keys
+        .filterNot(b => isSegmentBase(b) || b == payloadBase)
+        .flatMap(b => r.honored(b, p).nextOption())
       Set(p) ++ pay ++ segs ++ updBatches ++ geom
     }
-  }
+
+  /** Segment families mask a RANGE (payload(p), p]; every other family
+    * resolves to the newest committed version at-or-below p. */
+  private def isSegmentBase(b: String) =
+    b == "tombstones" || b == "deletes" || b == "eqdeletes"
 
   /** Returns the versions whose payload/segments were reclaimed (no
     * longer readable — their markers may linger as geometry survivors);
@@ -957,7 +909,8 @@ private[operators] object IndexManifest {
       pinned: Set[Long] = Set.empty): Seq[Long] = {
     require(keep >= 1)
     val f = fs(spark, path)
-    val vs = committedVersions(spark, path)
+    val r = resolve(spark, path)
+    val vs = r.committed
     if (vs.isEmpty) return Nil
     // retention horizon (the Delta RETAIN rule): a version COMMITTED
     // inside the last `retainMs` is never reclaimed regardless of `keep`,
@@ -971,32 +924,15 @@ private[operators] object IndexManifest {
     // long-lived tag must pin ITS OWN resolution set (payload, masking
     // segments, geometry, markers), not turn vacuum into a permanent
     // no-op for every version above it (unbounded storage growth)
-    val cutoff = payloadVersionAt(spark, path, keepSet.min, payloadBase)
-      .getOrElse(keepSet.min)
-    val families = f.listStatus(new Path(path)).map(_.getPath.getName)
-      .flatMap { n =>
-        val i = n.lastIndexOf("_v")
-        if (i <= 0) None
-        else {
-          val (base, ver) = (n.substring(0, i), n.substring(i + 2))
-          if (ver.nonEmpty && ver.forall(_.isDigit))
-            Some(base -> ver.toLong)
-          else None
-        }
-      }
-    // segment families mask a RANGE (payload(p), p]; every other family
-    // resolves to the newest committed version at-or-below p — the
-    // per-pin resolution sets come from [[protectedBy]]
-    def isSegmentBase(b: String) =
-      b == "tombstones" || b == "deletes" || b == "eqdeletes"
-    val protectedVers = protectedBy(spark, path, pinned, payloadBase, vs)
+    val cutoff = r.payloadAt(keepSet.min, payloadBase).getOrElse(keepSet.min)
+    // the per-pin resolution sets come from [[protectedBy]]
+    val protectedVers = protectedBy(spark, path, r, pinned, payloadBase)
     // geometry survivors: per family, the newest at-or-below-cutoff
     // version keeps serving retained versions — keep dir AND marker —
     // plus any version a pin resolves through
-    val bases = families.filter { case (b, _) =>
-      b != payloadBase && !isSegmentBase(b) }
-    val geomPlan = bases.groupBy(_._1).map { case (base, entries) =>
-      val below = entries.map(_._2).filter(_ <= cutoff).sorted
+    val geomPlan = r.disk.filter { case (b, _) =>
+      b != payloadBase && !isSegmentBase(b) }.map { case (base, vers) =>
+      val below = vers.filter(_ <= cutoff)
       val survivors =
         (below.lastOption.toSeq ++ below.filter(protectedVers)).toSet
       (base, below.filterNot(survivors), survivors)

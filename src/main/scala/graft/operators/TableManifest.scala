@@ -102,16 +102,6 @@ object TableManifest {
         .current().nextLong(base))
     }
 
-  private def payloadVersion(spark: SparkSession,
-      path: String): Option[Long] =
-    for {
-      v <- IndexManifest.currentVersion(spark, path)
-      p <- IndexManifest.payloadVersionAt(spark, path, v, "data")
-    } yield p
-
-  private def payloadDir(spark: SparkSession, path: String): Option[String] =
-    payloadVersion(spark, path).map(p => s"$path/data_v$p")
-
   /** First `__batch` id of the UNKEYED keyspace. Streaming (keyed)
     * batchIds are the stream's own dense counter from 0; unkeyed appends
     * (SQL INSERT INTO, DataFrame mode("append")) claim ids from this
@@ -133,76 +123,42 @@ object TableManifest {
     * ever serves. */
   private[operators] val UpdateBase: Long = 1L << 62
 
-  /** Append watermark of composite `version` (the highest streaming/
-    * low-range `__batch` id ever applied at-or-before it). Markers from
-    * before watermarks read as the payload's own max batch id. */
-  private def watermarkOf(spark: SparkSession, path: String,
-      version: Long): Long = {
-    val wm = IndexManifest.markerInfoAt(spark, path, version).wm
-    if (wm != Long.MaxValue) wm
-    else payloadDir(spark, path)
-      .map(d => VectorIndex.nextBatchId(spark, d) - 1L).getOrElse(-1L)
+  /** Which `__batch` ids one version serves: the low range (negatives +
+    * streaming ids) up to the keyed watermark `wm`, the unkeyed range
+    * [[[UnkeyedBase]], [[UpdateBase]]) up to `uwm`, and update-range ids
+    * whose embedded version is in `upd` (committed by an update or
+    * merge). */
+  private[operators] final case class Visible(wm: Long, uwm: Long,
+      upd: Set[Long] = Set.empty) {
+    def apply(b: Long): Boolean =
+      if (b < UnkeyedBase) b <= wm
+      else if (b < UpdateBase) b <= uwm
+      else upd.contains(b - UpdateBase)
+
+    /** The same test as a Column over the `__batch` field. */
+    def column: Column = {
+      val u =
+        if (upd.isEmpty) lit(false)
+        else (col("__batch") - UpdateBase).isin(upd.toSeq: _*)
+      when(col("__batch") < UnkeyedBase, col("__batch") <= wm)
+        .when(col("__batch") < UpdateBase, col("__batch") <= uwm)
+        .otherwise(u)
+    }
   }
 
-  /** Unkeyed (high-range) watermark of composite `version`: the highest
-    * committed unkeyed `__batch` id, or -1 when none (every pre-split
-    * marker — their unkeyed appends lived in the low range, covered by
-    * the keyed watermark). */
-  private def unkeyedWatermarkOf(spark: SparkSession, path: String,
-      version: Long): Long =
-    IndexManifest.markerInfoAt(spark, path, version).uwm
-
-  /** Watermark carried by the CURRENT version; -1 on a fresh path. */
-  private def currentWatermark(spark: SparkSession, path: String): Long =
-    IndexManifest.currentVersion(spark, path)
-      .map(v => watermarkOf(spark, path, v)).getOrElse(-1L)
-
-  private def currentUnkeyedWatermark(spark: SparkSession,
-      path: String): Long =
-    IndexManifest.currentVersion(spark, path)
-      .map(v => unkeyedWatermarkOf(spark, path, v)).getOrElse(-1L)
-
-  /** Is `__batch` id `b` visible under the (keyed, unkeyed) watermark
-    * pair + the committed-update-version set? Low range (negatives +
-    * streaming ids) answers against `wm`, the unkeyed range
-    * [[[UnkeyedBase]], [[UpdateBase]]) against `uwm`, the update range
-    * by membership of its embedded version in `updVers`. */
-  private def visibleId(b: Long, wm: Long, uwm: Long,
-      updVers: Set[Long] = Set.empty): Boolean =
-    if (b < UnkeyedBase) b <= wm
-    else if (b < UpdateBase) b <= uwm
-    else updVers.contains(b - UpdateBase)
-
-  /** [[visibleId]] as a Column over the `__batch` field. */
-  private def visibleBatch(wm: Long, uwm: Long,
-      updVers: Set[Long] = Set.empty): Column = {
-    val upd =
-      if (updVers.isEmpty) lit(false)
-      else (col("__batch") - UpdateBase).isin(updVers.toSeq: _*)
-    when(col("__batch") < UnkeyedBase, col("__batch") <= wm)
-      .when(col("__batch") < UpdateBase, col("__batch") <= uwm)
-      .otherwise(upd)
-  }
-
-  /** Versions in (payload(version), version] committed BY an update —
-    * the update batches composite `version` serves. Candidates come from
-    * the payload dir's update-range partitions (O(pending updates) —
-    * folds clear them), so old versions cost no marker reads. */
-  private def updateVersionsAt(spark: SparkSession, path: String,
-      version: Long, dir: String): Set[Long] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val f = fs(spark, path)
-    if (!f.exists(p)) return Set.empty
-    f.listStatus(p).map(_.getPath.getName)
+  /** The `__batch=` partition ids under payload dir `dir`, from one
+    * listing; empty when the dir is absent. */
+  private[operators] def batchIds(spark: SparkSession,
+      dir: String): Seq[Long] =
+    try fs(spark, dir).listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
+      .map(_.getPath.getName)
       .collect { case n if n.startsWith("__batch=") =>
         n.stripPrefix("__batch=").toLong }
-      .filter(_ >= UpdateBase).map(_ - UpdateBase)
-      .filter { d =>
-        val k = IndexManifest.markerInfoAt(spark, path, d).kind
-        d <= version && (k == "update" || k == "merge")
-      }
-      .toSet
-  }
+    catch { case _: java.io.FileNotFoundException => Nil }
+
+  /** The commit versions embedded in the update-range ids of `ids`. */
+  private[operators] def updateVersionsIn(ids: Seq[Long]): Seq[Long] =
+    ids.filter(_ >= UpdateBase).map(_ - UpdateBase)
 
   // ---- payload reads (internal): schema'd / merged / plain ---------------
 
@@ -225,14 +181,16 @@ object TableManifest {
     * version's append watermark is CARRIED FORWARD (replay safety: a
     * streaming batch at-or-below it no-ops instead of re-inserting rows
     * the snapshot already owns). Returns the committed version. */
-  def commitSnapshot(df: DataFrame, path: String): Long =
-    commitPayloadDir(df.sparkSession, path, stagePayload(df, path))
+  def commitSnapshot(df: DataFrame, path: String): Long = {
+    val spark = df.sparkSession
+    commitPayloadDir(spark, path,
+      stagePayload(enforceConstraints(df, viewOf(spark, path)), path))
+  }
 
   /** Write `df` as a staged snapshot payload (one `__batch=-1` fold
     * partition) and return the tmp dir the commit protocols rename. */
-  private def stagePayload(df0: DataFrame, path: String,
-      enforce: Boolean = true): org.apache.hadoop.fs.Path = {
-    val df = if (enforce) enforceConstraints(df0, path) else df0
+  private def stagePayload(df: DataFrame,
+      path: String): org.apache.hadoop.fs.Path = {
     val spark = df.sparkSession
     val tmp = new org.apache.hadoop.fs.Path(
       s"$path/.data_pending_${java.util.UUID.randomUUID}")
@@ -244,8 +202,7 @@ object TableManifest {
     // every row (an upsert sink draining to empty, a Complete-mode
     // aggregate with no groups yet) must stay a READABLE empty table, so
     // land the schema-bearing empty file the way createEmpty does
-    val f = fs(spark, path)
-    if (!f.listStatus(tmp).exists(_.getPath.getName.startsWith("__batch=")))
+    if (batchIds(spark, tmp.toString).isEmpty)
       spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
         .write.mode("overwrite").parquet(s"$tmp/__batch=-1")
@@ -275,8 +232,9 @@ object TableManifest {
         s"derived snapshot at $path lost the commit race $attempt " +
           "times in a row — retry under quieter write traffic")
       backoffBeforeRederive(attempt)
-      val v0 = IndexManifest.currentVersion(spark, path).get
-      val tmp = stagePayload(derive(v0), path)
+      val view = viewOf(spark, path)
+      val v0 = view.head
+      val tmp = stagePayload(enforceConstraints(derive(v0), view), path)
       hook()
       val d = v0 + 1
       val dst = new org.apache.hadoop.fs.Path(s"$path/data_v$d")
@@ -294,8 +252,7 @@ object TableManifest {
                 "maintain's cleanOrphans removes it")
           Thread.sleep(20)
         } else if (IndexManifest.tryCommitTagged(spark, path, d,
-            watermarkOf(spark, path, v0),
-            unkeyedWatermarkOf(spark, path, v0), "snapshot")) {
+            view.watermarkAt(v0), view.unkeyedWatermarkAt(v0), "snapshot")) {
           result = d
         } else {
           f.rename(dst, tmp)
@@ -351,7 +308,8 @@ object TableManifest {
     var v = -1L
     var committed = false
     while (!committed) {
-      v = IndexManifest.nextMutationVersion(spark, path)
+      val at = viewOf(spark, path)
+      v = at.nextVersion
       val dst = new org.apache.hadoop.fs.Path(s"$path/data_v$v")
       // the combined commit's artifact lives under its OWN family
       // (constraintsnap_v, honored only with a snapshot-kind marker):
@@ -366,9 +324,9 @@ object TableManifest {
         if (!ctmp.forall(t => renameExclusive(f, t, cdst))) {
           f.rename(dst, tmp) // constraint slot blocked: back out, retry
         } else {
-          committed = IndexManifest.tryCommitTagged(spark, path, v,
-            currentWatermark(spark, path),
-            currentUnkeyedWatermark(spark, path), "snapshot")
+          val (wm, uwm) = carriedInto(at, v)
+          committed = IndexManifest.tryCommitTagged(spark, path, v, wm, uwm,
+            "snapshot")
           if (!committed) { // lost the marker race: take BOTH back, retry
             f.rename(dst, tmp)
             ctmp.foreach(t => f.rename(cdst, t))
@@ -404,7 +362,7 @@ object TableManifest {
     * constraints replace the old set — the staging caller validates
     * the staged content against the NEW definition before publishing. */
   private[graft] def stageSnapshot(df: DataFrame, path: String): String =
-    stagePayload(df, path, enforce = false).toString
+    stagePayload(df, path).toString
 
   /** Publish a dir returned by [[stageSnapshot]] as the table's next
     * version — the commit half of atomic CTAS/RTAS. On an EXISTING
@@ -544,12 +502,13 @@ object TableManifest {
   def append(df0: DataFrame, path: String,
       batchId: Option[Long] = None): Long = {
     val spark = df0.sparkSession
-    require(IndexManifest.currentVersion(spark, path).isDefined,
+    val view = viewOf(spark, path)
+    require(view.current.isDefined,
       s"append into $path requires an initial commitSnapshot")
-    val df = physicalizeFrame(spark, path, enforceConstraints(df0, path))
-    val dir = payloadDir(spark, path).get
+    val df = physicalizeFrame(enforceConstraints(df0, view), view)
+    val dir = view.payloadDir.get
     val f = fs(spark, path)
-    val carried = currentWatermark(spark, path)
+    val carried = view.watermarkAt(view.head)
     val batch: Long = batchId match {
       case Some(b) =>
         require(b >= 0L && b < UnkeyedBase,
@@ -580,7 +539,7 @@ object TableManifest {
         var tries = 0
         while (!claimed) {
           b = math.max(nextUnkeyedId(spark, dir),
-            currentUnkeyedWatermark(spark, path) + 1L)
+            view.unkeyedWatermarkAt(view.head) + 1L)
           claimed = renameExclusive(f, tmp,
             new org.apache.hadoop.fs.Path(s"$dir/__batch=$b"))
           if (!claimed) {
@@ -598,7 +557,8 @@ object TableManifest {
     var curDir = dir
     var curBatch = batch
     while (!committed) {
-      v = IndexManifest.nextMutationVersion(spark, path)
+      val at = viewOf(spark, path)
+      v = at.nextVersion
       // the fold race the fault-injecting chaos spec caught: a
       // SNAPSHOT/fold can commit between our batch-dir claim and our
       // marker — the claim was invisible to its derivation (no marker
@@ -611,7 +571,7 @@ object TableManifest {
       // keep their replay id (a fresh fold payload holds only negative
       // fold partitions, so the id is free); unkeyed batches re-claim
       // a free id in the new dir.
-      val nowDir = payloadDir(spark, path).get
+      val nowDir = at.payloadDir.get
       if (nowDir != curDir) {
         val src = new org.apache.hadoop.fs.Path(s"$curDir/__batch=$curBatch")
         if (curBatch < UnkeyedBase) {
@@ -625,7 +585,7 @@ object TableManifest {
           var tries = 0
           while (!reclaimed) {
             val nb = math.max(nextUnkeyedId(spark, nowDir),
-              currentUnkeyedWatermark(spark, path) + 1L)
+              at.unkeyedWatermarkAt(at.head) + 1L)
             reclaimed = renameExclusive(f, src,
               new org.apache.hadoop.fs.Path(s"$nowDir/__batch=$nb"))
             if (reclaimed) curBatch = nb
@@ -639,35 +599,26 @@ object TableManifest {
         }
         curDir = nowDir
       }
+      val (wm, uwm) = carriedInto(at, v)
       committed =
         if (curBatch < UnkeyedBase)
           IndexManifest.tryCommitTagged(spark, path, v,
-            math.max(currentWatermark(spark, path), curBatch),
-            currentUnkeyedWatermark(spark, path), "append")
+            math.max(wm, curBatch), uwm, "append")
         else
           IndexManifest.tryCommitTagged(spark, path, v,
-            currentWatermark(spark, path),
-            math.max(currentUnkeyedWatermark(spark, path), curBatch),
-            "append")
+            wm, math.max(uwm, curBatch), "append")
     }
     v
   }
 
   /** Next free id in the UNKEYED keyspace of payload `dir` — the
-    * [[VectorIndex.nextBatchId]] listing restricted to
+    * [[batchIds]] listing restricted to
     * [[[UnkeyedBase]], [[UpdateBase]]) (an update batch's id must never
     * seed an unkeyed claim: it would land the append in the
     * version-gated update range and make it invisible). */
-  private def nextUnkeyedId(spark: SparkSession, dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val f = fs(spark, dir)
-    val ids = f.listStatus(p).filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("__batch=") =>
-        n.stripPrefix("__batch=").toLong }
-      .filter(b => b >= UnkeyedBase && b < UpdateBase)
-    if (ids.isEmpty) UnkeyedBase else ids.max + 1L
-  }
+  private def nextUnkeyedId(spark: SparkSession, dir: String): Long =
+    batchIds(spark, dir).filter(b => b >= UnkeyedBase && b < UpdateBase)
+      .maxOption.fold(UnkeyedBase)(_ + 1L)
 
   // ---- delete segments: predicate tombstones, masked at read -------------
 
@@ -686,27 +637,6 @@ object TableManifest {
     * predicate — `pred` is null on these. */
   private final case class DeletePred(pred: String, wm: Long, uwm: Long,
       ver: Long, keyCols: Seq[String] = Nil)
-
-  /** Committed delete-segment versions masking composite `version`:
-    * payload(version) < D <= version (segments at-or-below the payload
-    * were folded into it), and only when version D was committed BY a
-    * delete-carrying mutation (tagged marker kind) — a racing
-    * appender's marker at the same number must not legitimize an
-    * in-flight segment a losing deleteWhere is about to take back.
-    * Pre-tagging markers ("" kind) are honored — their delete segments
-    * really were the committer. */
-  private def deleteSegmentsAt(spark: SparkSession, path: String,
-      version: Long): Seq[Long] = {
-    val p = IndexManifest.payloadVersionAt(spark, path, version, "data")
-      .getOrElse(-1L)
-    val committed = IndexManifest.committedVersions(spark, path).toSet
-    IndexManifest.diskVersions(spark, path, "deletes")
-      .filter(d => d > p && d <= version && committed.contains(d))
-      .filter { d =>
-        val k = IndexManifest.markerInfoAt(spark, path, d).kind
-        k.isEmpty || k == "delete" || k == "update" || k == "merge"
-      }
-  }
 
   /** The scoped-predicate rows of `segs` — O(#deletes) tiny rows, one
     * driver read (the segment version rides along to scope update-range
@@ -790,9 +720,10 @@ object TableManifest {
 
   /** Pending (unfolded) delete segments on the CURRENT version — what
     * [[maintain]]'s fold policy and the metadata-count fallback check. */
-  def pendingDeletes(spark: SparkSession, path: String): Int =
-    IndexManifest.currentVersion(spark, path)
-      .map(v => deleteSegmentsAt(spark, path, v).size).getOrElse(0)
+  def pendingDeletes(spark: SparkSession, path: String): Int = {
+    val view = viewOf(spark, path)
+    view.current.fold(0)(view.deleteSegmentsAt(_).size)
+  }
 
   /** Warn threshold for unfolded delete/update segments, settable via
     * `spark.graft.table.pendingMutationsWarn` (default 64). Every live
@@ -857,17 +788,17 @@ object TableManifest {
     * committed version. */
   def deleteWhere(spark: SparkSession, path: String, predicateSql: String,
       schema: Option[StructType] = None): Long = {
-    require(IndexManifest.currentVersion(spark, path).isDefined,
-      s"no committed table at $path")
+    val view = viewOf(spark, path)
+    require(view.current.isDefined, s"no committed table at $path")
     // analysis check: resolves columns, parses the SQL — fails loudly here
-    read(spark, path, schema).filter(expr(predicateSql)).schema
+    readView(view, view.head, schema).filter(expr(predicateSql)).schema
     val f = fs(spark, path)
     import spark.implicits._
-    val carried = currentWatermark(spark, path)
-    val carriedU = currentUnkeyedWatermark(spark, path)
+    val carried = view.watermarkAt(view.head)
+    val carriedU = view.unkeyedWatermarkAt(view.head)
     // stored PHYSICAL-TOLERANT: a renamed column's reference becomes the
     // coalesce over its era names, so the mask hits pre-rename batches
-    val storedPred = physicalizePred(spark, path, predicateSql)
+    val storedPred = physicalizePred(view, predicateSql)
     val tmp = new org.apache.hadoop.fs.Path(
       s"$path/.deletes_pending_${java.util.UUID.randomUUID}")
     Seq((storedPred, carried, carriedU)).toDF("pred", "wm", "uwm")
@@ -880,14 +811,14 @@ object TableManifest {
     var blockedAt = -1L
     var blockedTries = 0
     while (!committed) {
-      val cur = IndexManifest.currentVersion(spark, path).get
+      val at = viewOf(spark, path)
+      val cur = at.head
       d = cur + 1
       val seg = new org.apache.hadoop.fs.Path(s"$path/deletes_v$d")
       if (renameExclusive(f, tmp, seg)) {
         blockedAt = -1L; blockedTries = 0
         committed = IndexManifest.tryCommitTagged(spark, path, d,
-          currentWatermark(spark, path),
-          currentUnkeyedWatermark(spark, path), "delete")
+          at.watermarkAt(cur), at.unkeyedWatermarkAt(cur), "delete")
         if (!committed) f.rename(seg, tmp) // lost the race: take it back
       } else {
         if (blockedAt == d) blockedTries += 1
@@ -949,10 +880,11 @@ object TableManifest {
           "row — retry under quieter write traffic")
       backoffBeforeRederive(attempt)
       // pin ONE version: everything below derives from v0
-      val v0 = IndexManifest.currentVersion(spark, path).get
-      val wm0 = watermarkOf(spark, path, v0)
-      val uwm0 = unkeyedWatermarkOf(spark, path, v0)
-      val cur = readAt(spark, path, v0, schema)
+      val view = viewOf(spark, path)
+      val v0 = view.head
+      val wm0 = view.watermarkAt(v0)
+      val uwm0 = view.unkeyedWatermarkAt(v0)
+      val cur = readView(view, v0, schema)
       val bad = assignments.map(_._1).filterNot(cur.columns.contains)
       require(bad.isEmpty,
         s"unknown column(s) in SET: ${bad.mkString(", ")} " +
@@ -967,10 +899,8 @@ object TableManifest {
       updated0.schema // analysis check: bad SQL fails the UPDATE, not reads
       // CHECK constraints gate the POST-image: a SET that would write a
       // violating row aborts before anything commits
-      val updated = physicalizeFrame(spark, path,
-        enforceConstraints(updated0, path))
-      val dir = s"$path/data_v" +
-        IndexManifest.payloadVersionAt(spark, path, v0, "data").get
+      val updated = physicalizeFrame(enforceConstraints(updated0, view), view)
+      val dir = view.payloadDirAt(v0).get
       val tmpBatch = new org.apache.hadoop.fs.Path(
         s"$path/.update_pending_${java.util.UUID.randomUUID}")
       updated.write.mode("overwrite").parquet(tmpBatch.toString)
@@ -980,7 +910,7 @@ object TableManifest {
       }
       val tmpSeg = new org.apache.hadoop.fs.Path(
         s"$path/.deletes_pending_${java.util.UUID.randomUUID}")
-      Seq((physicalizePred(spark, path, predicateSql), wm0, uwm0))
+      Seq((physicalizePred(view, predicateSql), wm0, uwm0))
         .toDF("pred", "wm", "uwm")
         .coalesce(1).write.mode("overwrite").parquet(tmpSeg.toString)
       // CAS with TWO claims (the replacement batch id embeds the
@@ -996,14 +926,17 @@ object TableManifest {
       // racing DELETE removed. A claim conflict with the head unmoved
       // means an in-flight partner (or crashed orphan) holds the slot:
       // spin bounded.
+      // `at` answers for d - 1: the pin, or the head the claim slid to
       var d = v0 + 1
+      var at = view
       var blockedTries = 0
       var result = -1L // >= 0 committed; -1 still claiming; -2 lost, retry
       while (result == -1L) {
         val head = IndexManifest.currentVersion(spark, path).get
         if (head >= d) {
-          val appendsOnly = ((v0 + 1) to head).forall(v =>
-            IndexManifest.markerInfoAt(spark, path, v).kind == "append")
+          at = viewOf(spark, path)
+          val appendsOnly =
+            ((v0 + 1) to head).forall(at.kindAt(_) == "append")
           if (appendsOnly) { d = head + 1; blockedTries = 0 }
           else result = -2L // a mutation landed: stale snapshot, restart
         } else {
@@ -1037,8 +970,8 @@ object TableManifest {
             // appends' when the claim slid) so append visibility never
             // regresses; the TOMBSTONE inside sdst keeps (wm0, uwm0).
             if (IndexManifest.tryCommitTagged(spark, path, d,
-                watermarkOf(spark, path, d - 1),
-                unkeyedWatermarkOf(spark, path, d - 1), "update"))
+                at.watermarkAt(d - 1), at.unkeyedWatermarkAt(d - 1),
+                "update"))
               result = d
             else {
               f.rename(bdst, tmpBatch)
@@ -1065,7 +998,7 @@ object TableManifest {
     * folded). */
   def updatedRowCount(spark: SparkSession, path: String,
       version: Long): Long =
-    IndexManifest.payloadVersionAt(spark, path, version, "data") match {
+    viewOf(spark, path).payloadAt(version) match {
       case Some(p) =>
         val dir = s"$path/data_v$p/__batch=${UpdateBase + version}"
         if (fs(spark, path).exists(new org.apache.hadoop.fs.Path(dir)))
@@ -1210,10 +1143,11 @@ object TableManifest {
           "row — raise spark.graft.merge.maxAttempts or retry under " +
           "quieter write traffic")
       backoffBeforeRederive(attempt)
-      val v0 = IndexManifest.currentVersion(spark, path).get
-      val wm0 = watermarkOf(spark, path, v0)
-      val uwm0 = unkeyedWatermarkOf(spark, path, v0)
-      val tgt = readAt(spark, path, v0, schema)
+      val view = viewOf(spark, path)
+      val v0 = view.head
+      val wm0 = view.watermarkAt(v0)
+      val uwm0 = view.unkeyedWatermarkAt(v0)
+      val tgt = readView(view, v0, schema)
       val tgtSchema = tgt.schema
       keyCols.foreach(k => require(
         tgtSchema.fields.exists(_.name.equalsIgnoreCase(k)),
@@ -1359,8 +1293,8 @@ object TableManifest {
         }
 
       val removeKeys = matchedKeys.unionByName(bysrcKeys).distinct()
-      val replacement = physicalizeFrame(spark, path, enforceConstraints(
-        matchedRepl.unionByName(bysrcRepl).unionByName(insRepl), path))
+      val replacement = physicalizeFrame(enforceConstraints(
+        matchedRepl.unionByName(bysrcRepl).unionByName(insRepl), view), view)
 
       // ---- stage everything, then the CAS at head + 1 (sliding over
       //      provably-disjoint appends). The tombstone keys stage
@@ -1394,7 +1328,7 @@ object TableManifest {
         def nMatched: Long =
           metricOpt(updObs).getOrElse(
             if (matched.isEmpty && bySource.isEmpty && inserts.isEmpty) 0L
-            else readAt(spark, path, v0, schema)
+            else readView(view, v0, schema)
               .select(keyCols.map(k => col(s"`$k`")): _*)
               .join(source.select(keyCols.map(k => col(s"`$k`")): _*),
                 keyCols, "left_semi").count())
@@ -1417,8 +1351,7 @@ object TableManifest {
           Seq((null: String, wm0, uwm0, keyCols.mkString(",")))
             .toDF("pred", "wm", "uwm", "keycols")
             .coalesce(1).write.mode("overwrite").parquet(tmpSeg.toString)
-        val dir = s"$path/data_v" +
-          IndexManifest.payloadVersionAt(spark, path, v0, "data").get
+        val dir = view.payloadDirAt(v0).get
         // can the claim SLIDE over the commits in (v0, head]? Only when
         // every one is a pure APPEND whose new rows' keys provably miss
         // every source key (one semi-probe over the delta batches only):
@@ -1444,50 +1377,49 @@ object TableManifest {
         // disjoint" — a silently stale merge. The mapping is pinned at
         // v0: any colmap commit inside the window has kind "colmap",
         // which already fails the all-appends check below.
-        val slideMap = columnMapOf(spark, path, Some(v0))
-        def slidable(head: Long): Boolean =
-          bySource.isEmpty &&
-            ((checkedHead + 1) to head).forall(v =>
-              IndexManifest.markerInfoAt(spark, path, v).kind ==
-                "append") && {
-              val wmH = watermarkOf(spark, path, head)
-              val uwmH = unkeyedWatermarkOf(spark, path, head)
-              val parts = f
-                .listStatus(new org.apache.hadoop.fs.Path(dir))
-                .map(_.getPath.getName)
-                .collect { case n if n.startsWith("__batch=") =>
-                  n.stripPrefix("__batch=").toLong }
-                .filter(b => b < UpdateBase &&
-                  visibleId(b, wmH, uwmH) &&
-                  !visibleId(b, wmChecked, uwmChecked))
-                .map(b => s"$dir/__batch=$b").toSeq
-              val disjoint = parts.isEmpty || {
-                val delta = applyColumnMap(
-                  payloadRead(spark, dir,
-                    Some(physicalReadSchema(keySchema, slideMap)),
-                    mergeSchema = false, basePath = Some(dir),
-                    parts = parts),
-                  slideMap, Some(keySchema))
-                val mk = source.select(keyCols.map(k =>
-                  col(s"`$k`").as(s"__mk_$k")): _*)
-                delta.join(mk, keyCols.map(k =>
-                    keyEq(col(s"`$k`"), col(s"`__mk_$k`"))).reduce(_ && _),
-                  "left_semi").isEmpty
-              }
-              if (disjoint) {
-                checkedHead = head; wmChecked = wmH; uwmChecked = uwmH
-              }
-              disjoint
-            }
+        val slideMap = view.columnMapAt(v0)
+        // the View the claim slides to, or None when it must restart
+        def slideTo(head: Long): Option[View] = {
+          if (bySource.nonEmpty) return None
+          val now = viewOf(spark, path)
+          if (!((checkedHead + 1) to head).forall(now.kindAt(_) == "append"))
+            return None
+          val wmH = now.watermarkAt(head)
+          val uwmH = now.unkeyedWatermarkAt(head)
+          val (seen, upTo) =
+            (Visible(wmChecked, uwmChecked), Visible(wmH, uwmH))
+          val parts = batchIds(spark, dir)
+            .filter(b => b < UpdateBase && upTo(b) && !seen(b))
+            .map(b => s"$dir/__batch=$b")
+          val disjoint = parts.isEmpty || {
+            val delta = applyColumnMap(
+              payloadRead(spark, dir,
+                Some(physicalReadSchema(keySchema, slideMap)),
+                mergeSchema = false, basePath = Some(dir), parts = parts),
+              slideMap, Some(keySchema))
+            val mk = source.select(keyCols.map(k =>
+              col(s"`$k`").as(s"__mk_$k")): _*)
+            delta.join(mk, keyCols.map(k =>
+                keyEq(col(s"`$k`"), col(s"`__mk_$k`"))).reduce(_ && _),
+              "left_semi").isEmpty
+          }
+          if (!disjoint) return None
+          checkedHead = head; wmChecked = wmH; uwmChecked = uwmH
+          Some(now)
+        }
+        // `at` answers for d - 1: the pin, or the head the claim slid to
         var d = v0 + 1
+        var at = view
         var blockedTries = 0
         var result = -1L // >= 0 committed; -1 claiming; -2 lost, re-derive
         while (result == -1L) {
           val head = IndexManifest.currentVersion(spark, path).get
           if (head >= d) {
-            if (slidable(head)) { d = head + 1; blockedTries = 0 }
-            else result = -2L // a mutation (or an intersecting append)
-                              // landed: stale derivation, restart
+            slideTo(head) match {
+              case Some(now) => at = now; d = head + 1; blockedTries = 0
+              case None => result = -2L // a mutation (or an intersecting
+                                        // append) landed: stale, restart
+            }
           } else {
             val bdst = new org.apache.hadoop.fs.Path(
               s"$dir/__batch=${UpdateBase + d}")
@@ -1513,8 +1445,8 @@ object TableManifest {
                     "cleanOrphans removes it")
               Thread.sleep(20)
             } else if (IndexManifest.tryCommitTagged(spark, path, d,
-                watermarkOf(spark, path, d - 1),
-                unkeyedWatermarkOf(spark, path, d - 1), "merge")) {
+                at.watermarkAt(d - 1), at.unkeyedWatermarkAt(d - 1),
+                "merge")) {
               // the marker carries d-1's watermarks (== the interleaved
               // appends' when the claim slid) so append visibility never
               // regresses; the TOMBSTONE inside sdst keeps (wm0, uwm0)
@@ -1576,117 +1508,144 @@ object TableManifest {
       }
     })
 
-  // ---- one-shot read resolution: listings + marker log captured once ----
+  // ---- View: one resolution per operation --------------------------------
 
-  /** Everything a READ needs to answer version questions, captured in
-    * two listing RPCs plus the checkpoint-backed [[IndexManifest
-    * .markerLog]] (marker BODIES from the checkpoint, existence from
-    * the live listing): committed set, versioned dirs per family, and
-    * every marker's watermarks/kind. The serving paths resolve against
-    * one View instead of re-listing and re-opening marker files per
-    * helper — on a busy table (a streaming Update-mode sink commits one
-    * marker per micro-batch) that is the difference between flat and
-    * O(#versions) read planning (`Stress manifestscale`). Mutators keep
-    * the always-fresh helpers: their CAS loops must observe concurrent
-    * commits, and marker bodies being immutable makes the View safe
-    * only for point-in-time answers, not for claim decisions. */
-  private[operators] final case class View(committed: Seq[Long],
-      disk: Map[String, Seq[Long]], log: IndexManifest.MarkerLog) {
-    val committedSet: Set[Long] = committed.toSet
-    def current: Option[Long] = committed.lastOption
-    def payloadAt(version: Long): Option[Long] =
-      disk.getOrElse("data", Nil)
-        .filter(p => p <= version && committedSet.contains(p)).lastOption
-    def diskOf(base: String): Seq[Long] = disk.getOrElse(base, Nil)
-  }
+  /** Everything an operation asks about the table's versions, answered
+    * from ONE [[IndexManifest.Resolved]] — the checkpoint-backed marker
+    * log (marker bodies read on demand, memoized) plus the root listing
+    * of versioned dirs — with the table's rules written once on top:
+    * kind-tagged honoring of payloads, delete segments, column maps and
+    * constraint sets ([[IndexManifest.Resolved.honored]]), watermark
+    * resolution, and `__batch` visibility. On a busy table (a streaming Update-mode sink commits
+    * one marker per micro-batch) resolving once is the difference
+    * between flat and O(#versions) planning (`Stress manifestscale`).
+    *
+    * Freshness rule: a View answers questions about versions at or
+    * below the head it read, and those answers never go stale (marker
+    * bodies are immutable; a committed version's dirs stay until
+    * vacuum). A read builds one View up front; a mutator builds one
+    * before it stages data and a fresh one at the top of each commit
+    * attempt. Claim decisions never come from a View: the CAS loops
+    * re-check the head with [[IndexManifest.currentVersion]], claims are
+    * [[IndexManifest.renameExclusive]] renames, and
+    * [[IndexManifest.tryCommitTagged]] refuses a commit below the tail. */
+  private[operators] final class View(val spark: SparkSession,
+      val path: String, r: IndexManifest.Resolved) {
+    def committed: Seq[Long] = r.committed
+    def current: Option[Long] = r.current
+    def head: Long = {
+      require(current.isDefined, s"no committed table at $path")
+      current.get
+    }
+    def isCommitted(version: Long): Boolean = r.log.committedSet(version)
+    def kindAt(version: Long): String = r.log.infoAt(version).kind
+    /** The number the next mutation must claim. */
+    def nextVersion: Long = r.nextVersion
 
-  private def viewOf(spark: SparkSession, path: String): View = {
-    val log = IndexManifest.markerLog(spark, path)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = fs(spark, path)
-    val disk: Map[String, Seq[Long]] =
-      if (!f.exists(p)) Map.empty
-      else f.listStatus(p).map(_.getPath.getName).toSeq.flatMap { n =>
-        val i = n.lastIndexOf("_v")
-        if (i <= 0) None
-        else {
-          val ver = n.substring(i + 2)
-          if (ver.nonEmpty && ver.forall(_.isDigit))
-            Some(n.substring(0, i) -> ver.toLong)
-          else None
+    def payloadAt(version: Long): Option[Long] = r.payloadAt(version, "data")
+    def payloadDirAt(version: Long): Option[String] =
+      payloadAt(version).map(p => s"$path/data_v$p")
+    /** The current payload version. */
+    def payload: Option[Long] = current.flatMap(payloadAt)
+    def payloadDir: Option[String] = current.flatMap(payloadDirAt)
+
+    /** Keyed watermark of `version`: the highest streaming/low-range
+      * `__batch` id applied at-or-before it. Markers from before
+      * watermarks read as the current payload's own max batch id. */
+    def watermarkAt(version: Long): Long = {
+      val wm = r.log.infoAt(version).wm
+      if (wm != Long.MaxValue) wm
+      else payloadDir.fold(-1L)(batchIds(spark, _).foldLeft(-1L)(math.max))
+    }
+
+    /** Unkeyed (high-range) watermark of `version`: the highest committed
+      * unkeyed `__batch` id, or -1 when none (every pre-split marker —
+      * their unkeyed appends lived in the low range, covered by the
+      * keyed watermark). */
+    def unkeyedWatermarkAt(version: Long): Long = r.log.infoAt(version).uwm
+
+    /** The batches `version` serves, given the `__batch` ids of its
+      * payload dir: update batches count only when their version was
+      * committed BY an update or merge (an orphaned claim's never does). */
+    def visibleAt(version: Long, ids: Seq[Long]): Visible =
+      Visible(watermarkAt(version), unkeyedWatermarkAt(version),
+        updateVersionsIn(ids)
+          .filter(d => d <= version && UpdateKinds(kindAt(d))).toSet)
+
+    /** Committed delete-segment versions masking `version`:
+      * payload(version) < D <= version (segments at-or-below the payload
+      * were folded into it), and only when version D was committed BY a
+      * delete-carrying mutation (tagged marker kind) — a racing
+      * appender's marker at the same number must not legitimize an
+      * in-flight segment a losing deleteWhere is about to take back.
+      * Pre-tagging markers ("" kind) are honored — their delete segments
+      * really were the committer. */
+    def deleteSegmentsAt(version: Long): Seq[Long] =
+      r.honored("deletes", version, Some(DeleteKinds),
+        after = payloadAt(version).getOrElse(-1L)).toSeq.reverse
+
+    /** The column mapping visible at `version` — the newest `colmap_v`
+      * artifact at-or-below it committed by a `colmap` marker; empty =
+      * identity (the common case: no artifact read). */
+    def columnMapAt(version: Long): Seq[ColumnMapping] =
+      r.honored("colmap", version, Some(Set("colmap"))).nextOption()
+        .fold(Seq.empty[ColumnMapping])(readColMap(spark, path, _))
+
+    /** The constraints visible at `version`: the newest constraint
+      * artifact at-or-below it committed by the matching mutation kind —
+      * `constraints_v` by a `constraints` marker (plain ADD/DROP
+      * CONSTRAINT DDL), `constraintsnap_v` by a `snapshot` one (the
+      * combined payload+constraints REPLACE/CTAS commit — its own
+      * family, so an unrelated snapshot committer at the number a losing
+      * PLAIN setConstraints parked its artifact under can never
+      * legitimize the uncommitted set). Empty = none. */
+    def constraintsAt(version: Long): Seq[TableConstraint] =
+      Seq("constraints" -> "constraints", "constraintsnap" -> "snapshot")
+        .flatMap { case (family, kind) =>
+          r.honored(family, version, Some(Set(kind))).nextOption()
+            .map(_ -> family)
+        }.maxByOption(_._1)
+        .fold(Seq.empty[TableConstraint]) { case (cv, family) =>
+          readConstraints(spark, s"$path/${family}_v$cv")
         }
-      }.groupBy(_._1).map { case (b, vs) => b -> vs.map(_._2).sorted }
-    View(log.committed, disk, log)
   }
 
-  private def watermarkOfV(spark: SparkSession, path: String, view: View,
-      version: Long): Long = {
-    val wm = view.log.infoAt(version).wm
-    if (wm != Long.MaxValue) wm
-    else view.current.flatMap(view.payloadAt)
-      .map(p => VectorIndex.nextBatchId(spark, s"$path/data_v$p") - 1L)
-      .getOrElse(-1L)
-  }
+  /** Marker kinds that legitimize a delete segment ("" = pre-tagging). */
+  private val DeleteKinds = Set("", "delete", "update", "merge")
+  /** Marker kinds that legitimize an update-range batch. */
+  private val UpdateKinds = Set("update", "merge")
 
-  private def updateVersionsAtV(spark: SparkSession, path: String,
-      view: View, version: Long, dir: String): Set[Long] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val f = fs(spark, path)
-    if (!f.exists(p)) return Set.empty
-    f.listStatus(p).map(_.getPath.getName)
-      .collect { case n if n.startsWith("__batch=") =>
-        n.stripPrefix("__batch=").toLong }
-      .filter(_ >= UpdateBase).map(_ - UpdateBase)
-      .filter { d =>
-        val k = view.log.infoAt(d).kind
-        d <= version && (k == "update" || k == "merge")
-      }.toSet
-  }
+  private def viewOf(spark: SparkSession, path: String): View =
+    new View(spark, path, IndexManifest.resolve(spark, path))
 
-  private def deleteSegmentsAtV(view: View, version: Long): Seq[Long] = {
-    val p = view.payloadAt(version).getOrElse(-1L)
-    view.diskOf("deletes")
-      .filter(d => d > p && d <= version && view.committedSet.contains(d))
-      .filter { d =>
-        val k = view.log.infoAt(d).kind
-        k.isEmpty || k == "delete" || k == "update" || k == "merge"
-      }
+  /** The (keyed, unkeyed) watermarks a marker committed at `v` carries
+    * forward: those of the newest version below `v`. The attempt's View
+    * holds them when `v` is its head + 1 — a commit landing in between
+    * would take `v` itself and make ours refuse. A claim past a number
+    * gap re-reads them just before its commit. */
+  private def carriedInto(at: View, v: Long): (Long, Long) = {
+    val base =
+      if (at.current.forall(_ + 1 == v)) at else viewOf(at.spark, at.path)
+    base.current.fold((-1L, -1L))(h =>
+      (base.watermarkAt(h), base.unkeyedWatermarkAt(h)))
   }
-
-  private def columnMapOfV(spark: SparkSession, path: String, view: View,
-      version: Long): Seq[ColumnMapping] =
-    view.diskOf("colmap")
-      .filter(cv => cv <= version && view.committedSet.contains(cv) &&
-        view.log.infoAt(cv).kind == "colmap")
-      .lastOption.map(readColMap(spark, path, _)).getOrElse(Nil)
 
   /** The masked PHYSICAL frame of composite `version` (still carrying
     * `__batch` and pre-rename column names) — masks evaluate here
     * because tombstone predicates are stored physical-tolerant.
     * [[resolvedAt]] applies the column mapping on top. */
-  private def resolvedPhysical(spark: SparkSession, path: String,
-      view: View, version: Long, schema: Option[StructType],
-      mergeSchema: Boolean, mapping: Seq[ColumnMapping]): DataFrame = {
+  private def resolvedPhysical(view: View, version: Long,
+      schema: Option[StructType], mergeSchema: Boolean,
+      mapping: Seq[ColumnMapping]): DataFrame = {
+    val spark = view.spark
     val p = view.payloadAt(version)
-    require(p.isDefined,
-      s"version $version of $path has been vacuumed — raise vacuum(keep)")
-    val wm = watermarkOfV(spark, path, view, version)
-    val uwm = view.log.infoAt(version).uwm
-    val dir = s"$path/data_v${p.get}"
+    require(p.isDefined, s"version $version of ${view.path} has been " +
+      "vacuumed — raise vacuum(keep)")
+    val dir = s"${view.path}/data_v${p.get}"
     // ONE listing of the payload dir serves both the update-version
     // resolution and the visible-batch restriction below
-    val dp = new org.apache.hadoop.fs.Path(dir)
-    val f = fs(spark, path)
-    val batchIds: Seq[Long] =
-      if (!f.exists(dp)) Nil
-      else f.listStatus(dp).map(_.getPath.getName)
-        .collect { case n if n.startsWith("__batch=") =>
-          n.stripPrefix("__batch=").toLong }.toSeq
-    val updVers = batchIds.filter(_ >= UpdateBase).map(_ - UpdateBase)
-      .filter { d =>
-        val k = view.log.infoAt(d).kind
-        d <= version && (k == "update" || k == "merge")
-      }.toSet
+    val batches = batchIds(spark, dir)
+    val visibility = view.visibleAt(version, batches)
     // a live mapping needs the FULL footer union: plain parquet schema
     // sampling could pick a pre-rename file and lose the new-era name
     // the masks and the logical view coalesce over
@@ -1697,7 +1656,7 @@ object TableManifest {
     // leak its columns into this version's schema. Pins serve era
     // schemas BY CONSTRUCTION (cold sessions included), not by schema-
     // cache warmth; row visibility was already exact either way.
-    val visible = batchIds.filter(visibleId(_, wm, uwm, updVers))
+    val visible = batches.filter(visibility(_))
     // a pin with ZERO row-visible batches must still serve ITS era's
     // schema: footer-union only dirs whose era is at-or-below this
     // version (update-range ids embed their commit version; low/unkeyed
@@ -1706,19 +1665,19 @@ object TableManifest {
     // empty frame's schema.
     val schemaSafe =
       if (visible.nonEmpty) visible
-      else batchIds.filter(b =>
+      else batches.filter(b =>
         b >= UpdateBase && b - UpdateBase <= version)
     val base =
-      if (merge && schemaSafe.nonEmpty && schemaSafe.size < batchIds.size)
+      if (merge && schemaSafe.nonEmpty && schemaSafe.size < batches.size)
         payloadRead(spark, dir,
           schema.map(physicalReadSchema(_, mapping)), merge,
           basePath = Some(dir),
           parts = schemaSafe.map(b => s"$dir/__batch=$b"))
       else payloadRead(spark, dir,
         schema.map(physicalReadSchema(_, mapping)), merge)
-    maskDeletes(base.filter(visibleBatch(wm, uwm, updVers)),
-      deletePredsOf(spark, path, deleteSegmentsAtV(view, version)),
-      path, mapping)
+    maskDeletes(base.filter(visibility.column),
+      deletePredsOf(spark, view.path, view.deleteSegmentsAt(version)),
+      view.path, mapping)
   }
 
   /** Resolved rows of composite `version` WITH the `__batch` column:
@@ -1726,14 +1685,19 @@ object TableManifest {
     * column mapping applied (renamed columns resolve, dropped ones
     * disappear — each at the ERA the version pins). The one read
     * everything public builds on. */
-  private def resolvedAt(spark: SparkSession, path: String, view: View,
-      version: Long, schema: Option[StructType],
-      mergeSchema: Boolean): DataFrame = {
-    val mapping = columnMapOfV(spark, path, view, version)
+  private def resolvedAt(view: View, version: Long,
+      schema: Option[StructType], mergeSchema: Boolean): DataFrame = {
+    val mapping = view.columnMapAt(version)
     applyColumnMap(
-      resolvedPhysical(spark, path, view, version, schema, mergeSchema,
-        mapping), mapping, schema)
+      resolvedPhysical(view, version, schema, mergeSchema, mapping),
+      mapping, schema)
   }
+
+  /** [[resolvedAt]] without the `__batch` column — what callers see. */
+  private def readView(view: View, version: Long,
+      schema: Option[StructType] = None,
+      mergeSchema: Boolean = false): DataFrame =
+    resolvedAt(view, version, schema, mergeSchema).drop("__batch")
 
   /** The current live table: committed batches only (at-or-below the
     * current watermark — a concurrent in-flight or crash-orphaned batch
@@ -1746,7 +1710,7 @@ object TableManifest {
     val view = viewOf(spark, path)
     val v = view.current.getOrElse(
       sys.error(s"no committed table at $path"))
-    resolvedAt(spark, path, view, v, schema, mergeSchema).drop("__batch")
+    readView(view, v, schema, mergeSchema)
   }
 
   /** VERSION AS OF `version`: the newest payload at-or-below it, batches
@@ -1758,10 +1722,9 @@ object TableManifest {
       schema: Option[StructType] = None,
       mergeSchema: Boolean = false): DataFrame = {
     val view = viewOf(spark, path)
-    require(view.committedSet.contains(version),
+    require(view.isCommitted(version),
       s"version $version was never committed at $path")
-    resolvedAt(spark, path, view, version, schema, mergeSchema)
-      .drop("__batch")
+    readView(view, version, schema, mergeSchema)
   }
 
   /** CHANGE DATA FEED between two committed versions — what downstream
@@ -1800,8 +1763,7 @@ object TableManifest {
     require(fromVersion <= toVersion,
       s"fromVersion $fromVersion must be <= toVersion $toVersion")
     val view = viewOf(spark, path)
-    require(view.committedSet.contains(fromVersion) &&
-        view.committedSet.contains(toVersion),
+    require(view.isCommitted(fromVersion) && view.isCommitted(toVersion),
       s"both versions must be committed at $path")
     val pF = view.payloadAt(fromVersion)
     val pT = view.payloadAt(toVersion)
@@ -1809,31 +1771,22 @@ object TableManifest {
       s"a version in [$fromVersion, $toVersion] of $path has been " +
         "vacuumed — raise vacuum(keep)")
     if (pF == pT) {
-      val wmF = watermarkOfV(spark, path, view, fromVersion)
-      val wmT = watermarkOfV(spark, path, view, toVersion)
-      val uwmF = view.log.infoAt(fromVersion).uwm
-      val uwmT = view.log.infoAt(toVersion).uwm
       val dir = s"$path/data_v${pT.get}"
-      val updF = updateVersionsAtV(spark, path, view, fromVersion, dir)
-      val updT = updateVersionsAtV(spark, path, view, toVersion, dir)
-      val segsF = deleteSegmentsAtV(view, fromVersion).toSet
-      val segsT = deleteSegmentsAtV(view, toVersion)
+      val batches = batchIds(spark, dir)
+      val visF = view.visibleAt(fromVersion, batches)
+      val visT = view.visibleAt(toVersion, batches)
+      val segsF = view.deleteSegmentsAt(fromVersion).toSet
+      val segsT = view.deleteSegmentsAt(toVersion)
       val newSegs = segsT.filterNot(segsF)
-      val survivors = fs(spark, path)
-        .listStatus(new org.apache.hadoop.fs.Path(dir))
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("__batch=") =>
-          n.stripPrefix("__batch=").toLong }
-        .filter(b => visibleId(b, wmT, uwmT, updT) &&
-          !visibleId(b, wmF, uwmF, updF))
+      val survivors = batches.filter(b => visT(b) && !visF(b))
         .map(b => s"$dir/__batch=$b")
       // the window's era mapping: TO-side — the shared payload dir's
       // footer union carries every era's physical names, so older rows
       // resolve under it too
-      val mapping = columnMapOfV(spark, path, view, toVersion)
+      val mapping = view.columnMapAt(toVersion)
       val inserts =
         if (survivors.isEmpty)
-          readAt(spark, path, toVersion, schema).filter(lit(false))
+          readView(view, toVersion, schema).filter(lit(false))
         else
           // masked by the TO-view's segments: a row appended then deleted
           // inside the window never enters the feed (net zero)
@@ -1841,7 +1794,7 @@ object TableManifest {
             payloadRead(spark, dir,
               schema.map(physicalReadSchema(_, mapping)),
               mergeSchema = false,
-              basePath = Some(dir), parts = survivors.toSeq),
+              basePath = Some(dir), parts = survivors),
             deletePredsOf(spark, path, segsT), path, mapping),
             mapping, schema).drop("__batch")
       val insertFeed = inserts.withColumn("_change_type", lit("insert"))
@@ -1854,7 +1807,7 @@ object TableManifest {
         // then the mapping resolves the logical feed shape.
         val preds = deletePredsOf(spark, path, newSegs)
         val (flagged, hitAny, helpers) = flagDeletes(
-          resolvedPhysical(spark, path, view, fromVersion, schema,
+          resolvedPhysical(view, fromVersion, schema,
             mergeSchema = false, mapping), preds, path, mapping)
         val deletes = applyColumnMap(
             flagged.filter(hitAny).drop(helpers: _*), mapping, schema)
@@ -1891,8 +1844,8 @@ object TableManifest {
             deletes.withColumn("_change_type", lit("delete")))
       }
     } else {
-      val a = readAt(spark, path, fromVersion, schema)
-      val b = readAt(spark, path, toVersion, schema)
+      val a = readView(view, fromVersion, schema)
+      val b = readView(view, toVersion, schema)
       // a replacement that EVOLVED the schema has no row-level diff
       // (exceptAll would throw a shape error deep in analysis) — fail
       // with the actual situation and the way out
@@ -1963,7 +1916,7 @@ object TableManifest {
 
   /** All committed versions still resolvable, ascending. */
   def versions(spark: SparkSession, path: String): Seq[Long] =
-    IndexManifest.committedVersions(spark, path)
+    IndexManifest.markerLog(spark, path).committed
 
   /** Force a manifest-log checkpoint at the current head (normally
     * written automatically every
@@ -2194,13 +2147,9 @@ object TableManifest {
     * read). */
   def columnMapOf(spark: SparkSession, path: String,
       version: Option[Long] = None): Seq[ColumnMapping] = {
-    val v = version.orElse(IndexManifest.currentVersion(spark, path))
-      .getOrElse(return Nil)
-    val committed = IndexManifest.committedVersions(spark, path).toSet
-    IndexManifest.diskVersions(spark, path, "colmap")
-      .filter(cv => cv <= v && committed.contains(cv) &&
-        IndexManifest.markerInfoAt(spark, path, cv).kind == "colmap")
-      .lastOption.map(readColMap(spark, path, _)).getOrElse(Nil)
+    val view = viewOf(spark, path)
+    version.orElse(view.current)
+      .fold(Seq.empty[ColumnMapping])(view.columnMapAt)
   }
 
   /** The `colmap_v<cv>` artifact's rows — O(#columns), one driver
@@ -2233,10 +2182,10 @@ object TableManifest {
     var v = -1L
     var committed = false
     while (!committed) {
+      val at = viewOf(spark, path)
       expectedCurrent.foreach { e =>
-        val cur = IndexManifest.currentVersion(spark, path).get
-        val competing = ((e + 1) to cur).exists(v =>
-          IndexManifest.markerInfoAt(spark, path, v).kind == "colmap")
+        val cur = at.head
+        val competing = ((e + 1) to cur).exists(at.kindAt(_) == "colmap")
         if (competing) {
           f.delete(tmp, true)
           throw new java.util.ConcurrentModificationException(
@@ -2245,12 +2194,12 @@ object TableManifest {
               s"at $cur) — re-read and retry")
         }
       }
-      v = IndexManifest.nextMutationVersion(spark, path)
+      v = at.nextVersion
       val dst = new org.apache.hadoop.fs.Path(s"$path/colmap_v$v")
       if (renameExclusive(f, tmp, dst)) {
-        committed = IndexManifest.tryCommitTagged(spark, path, v,
-          currentWatermark(spark, path),
-          currentUnkeyedWatermark(spark, path), "colmap")
+        val (wm, uwm) = carriedInto(at, v)
+        committed = IndexManifest.tryCommitTagged(spark, path, v, wm, uwm,
+          "colmap")
         if (!committed) f.rename(dst, tmp)
       }
     }
@@ -2262,12 +2211,12 @@ object TableManifest {
     * historical names; a collision with one of those would make the
     * same physical bytes mean two columns). */
   def physicalColumns(spark: SparkSession, path: String): Seq[String] =
-    payloadDir(spark, path) match {
-      case None => Nil
-      case Some(d) =>
-        payloadRead(spark, d, None, mergeSchema = true)
-          .schema.fieldNames.toSeq.filterNot(_ == "__batch")
-    }
+    physicalColumnsOf(viewOf(spark, path))
+
+  private def physicalColumnsOf(view: View): Seq[String] =
+    view.payloadDir.fold(Seq.empty[String])(d =>
+      payloadRead(view.spark, d, None, mergeSchema = true)
+        .schema.fieldNames.toSeq.filterNot(_ == "__batch"))
 
   /** `name` → the Column reading it through `mapping` on a PHYSICAL
     * frame with columns `present`: the coalesce of the owning entry's
@@ -2305,14 +2254,13 @@ object TableManifest {
     * [[updateWhere]] STORE in their tombstones, so the mask evaluates
     * correctly on the physical frame across every era's batches.
     * Identity when no mapping is live. */
-  private def physicalizePred(spark: SparkSession, path: String,
-      predicateSql: String): String = {
-    val mapping = columnMapOf(spark, path)
+  private def physicalizePred(view: View, predicateSql: String): String = {
+    val mapping = view.columnMapAt(view.head)
     if (mapping.isEmpty) return predicateSql
     // only names some payload file actually carries enter the stored
     // coalesce — a just-renamed column whose new name has no footer yet
     // must not make every later read's mask unresolvable
-    val present = physicalColumns(spark, path)
+    val present = physicalColumnsOf(view)
       .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
     val byName = mapping.filterNot(_.dropped).flatMap(m =>
       (m.logical +: m.physical).map(n =>
@@ -2321,7 +2269,7 @@ object TableManifest {
       UnresolvedExtractValue}
     import org.apache.spark.sql.catalyst.expressions.{Cast, Coalesce,
       Expression, Literal}
-    spark.sessionState.sqlParser.parseExpression(predicateSql)
+    view.spark.sessionState.sqlParser.parseExpression(predicateSql)
       .transformUp {
         // the HEAD of a (possibly nested) reference is the top-level
         // column renames operate on: `point.x` with `point` renamed
@@ -2363,9 +2311,8 @@ object TableManifest {
     * ([[append]], the [[updateWhere]]/[[mergeWhere]] replacement
     * batches); snapshot-shaped commits replace the payload wholesale
     * and stay logical. */
-  private def physicalizeFrame(spark: SparkSession, path: String,
-      df: DataFrame): DataFrame = {
-    val mapping = columnMapOf(spark, path)
+  private def physicalizeFrame(df: DataFrame, view: View): DataFrame = {
+    val mapping = view.columnMapAt(view.head)
     if (mapping.isEmpty) return df
     df.columns.foldLeft(df) { (d, c) =>
       mapping.find(m => !m.dropped &&
@@ -2386,9 +2333,9 @@ object TableManifest {
     * bytes still drive a live mask until a fold erases it. */
   private[graft] def pendingSegmentColumns(spark: SparkSession,
       path: String): Set[String] = {
-    val v = IndexManifest.currentVersion(spark, path)
-      .getOrElse(return Set.empty)
-    deletePredsOf(spark, path, deleteSegmentsAt(spark, path, v))
+    val view = viewOf(spark, path)
+    val v = view.current.getOrElse(return Set.empty)
+    deletePredsOf(spark, path, view.deleteSegmentsAt(v))
       .flatMap { dp =>
         dp.keyCols.map(_.toLowerCase(java.util.Locale.ROOT)) ++
           (if (dp.pred == null) Nil
@@ -2475,38 +2422,26 @@ object TableManifest {
 
   /** Constraints visible at `version` (default: current) — the newest
     * constraint artifact at-or-below it whose version was committed BY
-    * the matching mutation kind: `constraints_v` artifacts need a
-    * `constraints`-kind marker (plain ADD/DROP CONSTRAINT DDL), and
-    * `constraintsnap_v` artifacts a `snapshot`-kind one (the combined
-    * payload+constraints REPLACE/CTAS commit — its own family, so an
-    * unrelated snapshot committer at the number a losing PLAIN
-    * setConstraints parked its artifact under can never legitimize the
-    * uncommitted set; both races resolve to "not honored", the
-    * [[deleteSegmentsAt]] discipline). None = empty. */
+    * the matching mutation kind (see [[View.constraintsAt]]; a dir
+    * parked by a losing committer is never honored, the
+    * [[View.deleteSegmentsAt]] discipline). Empty = none. */
   def constraintsOf(spark: SparkSession, path: String,
       version: Option[Long] = None): Seq[TableConstraint] = {
-    val v = version.orElse(IndexManifest.currentVersion(spark, path))
-      .getOrElse(return Nil)
-    val committed = IndexManifest.committedVersions(spark, path).toSet
-    def honored(family: String, wantKind: String): Seq[(Long, String)] =
-      IndexManifest.diskVersions(spark, path, family)
-        .filter(cv => cv <= v && committed.contains(cv) &&
-          IndexManifest.markerInfoAt(spark, path, cv).kind == wantKind)
-        .map(_ -> family)
-    (honored("constraints", "constraints") ++
-      honored("constraintsnap", "snapshot"))
-      .sortBy(_._1).lastOption match {
-      case None => Nil
-      case Some((cv, family)) =>
-        spark.read.schema(ConstraintSchema)
-          .parquet(s"$path/${family}_v$cv")
-          .collect()
-          .map(r => TableConstraint(r.getString(0), r.getString(1),
-            r.getBoolean(2), r.getBoolean(3), r.getString(4),
-            if (r.isNullAt(5)) "check" else r.getString(5)))
-          .sortBy(_.name).toSeq
-    }
+    val view = viewOf(spark, path)
+    version.orElse(view.current)
+      .fold(Seq.empty[TableConstraint])(view.constraintsAt)
   }
+
+  /** A constraint artifact's rows — O(#constraints), one driver read;
+    * pre-kind artifacts read kind = "check". */
+  private def readConstraints(spark: SparkSession,
+      dir: String): Seq[TableConstraint] =
+    spark.read.schema(ConstraintSchema).parquet(dir)
+      .collect()
+      .map(r => TableConstraint(r.getString(0), r.getString(1),
+        r.getBoolean(2), r.getBoolean(3), r.getString(4),
+        if (r.isNullAt(5)) "check" else r.getString(5)))
+      .sortBy(_.name).toSeq
 
   /** Replace the table's constraint set in ONE marker commit (kind
     * `constraints` — a metadata-only version: no payload, no segment,
@@ -2528,20 +2463,21 @@ object TableManifest {
     require(dup.isEmpty, s"duplicate constraint name(s): ${dup.mkString(", ")}")
     // analysis check NOW: a predicate that doesn't resolve against the
     // merged schema fails the DDL, not every later write
-    cs.foreach(c => read(spark, path, None, mergeSchema = true)
-      .filter(expr(c.sql)).schema)
+    val merged = read(spark, path, None, mergeSchema = true)
+    cs.foreach(c => merged.filter(expr(c.sql)).schema)
     val f = fs(spark, path)
     val tmp = stageConstraintRows(spark, path, cs)
     var v = -1L
     var committed = false
     while (!committed) {
+      val at = viewOf(spark, path)
       expectedCurrent.foreach { e =>
-        val cur = IndexManifest.currentVersion(spark, path).get
+        val cur = at.head
         // only ANOTHER constraints commit can have changed the set —
         // interleaved appends/deletes/updates are harmless and must not
         // starve constraint DDL on a busy streaming table
-        val competing = ((e + 1) to cur).exists(v =>
-          IndexManifest.markerInfoAt(spark, path, v).kind == "constraints")
+        val competing =
+          ((e + 1) to cur).exists(at.kindAt(_) == "constraints")
         if (competing) {
           f.delete(tmp, true)
           throw new java.util.ConcurrentModificationException(
@@ -2550,12 +2486,12 @@ object TableManifest {
               s"$cur) — re-read and retry")
         }
       }
-      v = IndexManifest.nextMutationVersion(spark, path)
+      v = at.nextVersion
       val dst = new org.apache.hadoop.fs.Path(s"$path/constraints_v$v")
       if (renameExclusive(f, tmp, dst)) {
-        committed = IndexManifest.tryCommitTagged(spark, path, v,
-          currentWatermark(spark, path),
-          currentUnkeyedWatermark(spark, path), "constraints")
+        val (wm, uwm) = carriedInto(at, v)
+        committed = IndexManifest.tryCommitTagged(spark, path, v, wm, uwm,
+          "constraints")
         if (!committed) f.rename(dst, tmp) // lost the marker race: retry
       }
     }
@@ -2570,10 +2506,10 @@ object TableManifest {
     * job before any commit, so atomicity holds). A constraint whose
     * columns are absent from `df` (an evolving narrow append) passes by
     * the NULL-satisfies rule — those rows read NULL for the column. */
-  private def enforceConstraints(df: DataFrame, path: String): DataFrame = {
-    val spark = df.sparkSession
-    if (!exists(spark, path)) return df
-    constraintsOf(spark, path).filter(_.enforced).foldLeft(df) { (d, c) =>
+  private def enforceConstraints(df: DataFrame, view: View): DataFrame = {
+    val path = view.path
+    view.current.fold(Seq.empty[TableConstraint])(view.constraintsAt)
+      .filter(_.enforced).foldLeft(df) { (d, c) =>
       scala.util.Try(d.filter(expr(c.sql)).schema) match {
         case scala.util.Failure(_) =>
           // column not in this frame. For CHECK that's the NULL-pass
@@ -2625,7 +2561,7 @@ object TableManifest {
       // operation column): append/snapshot/delete/update, or '' for a
       // pre-tagging legacy marker — off the checkpoint-backed marker
       // log (one file open for the whole walk, not one per version)
-      val kind = view.log.infoAt(v).kind
+      val kind = view.kindAt(v)
       val tagStr = tagsOf.getOrElse(v, "")
       view.payloadAt(v) match {
         case None =>
@@ -2634,7 +2570,7 @@ object TableManifest {
             s"CAST(NULL AS BIGINT) AS payload_bytes, '$kind' AS kind, " +
             s"'$tagStr' AS tags"
         case Some(p) =>
-          val n = scala.util.Try(readAt(spark, path, v, schema).count())
+          val n = scala.util.Try(readView(view, v, schema).count())
             .getOrElse(0L)
           val bytes = f.getContentSummary(
             new org.apache.hadoop.fs.Path(s"$path/data_v$p")).getLength
@@ -2719,7 +2655,8 @@ object TableManifest {
       olderThanMs: Long = 3600000L): Int = {
     val f = fs(spark, path)
     val now = System.currentTimeMillis
-    val cur = IndexManifest.currentVersion(spark, path).getOrElse(-1L)
+    val view = viewOf(spark, path)
+    val cur = view.current.getOrElse(-1L)
     var removed = 0
     // coordinator hygiene: a crashed mutation's CLAIM row (coordinated
     // store) blocks its slot just like its orphan dir does — forgetting
@@ -2765,7 +2702,7 @@ object TableManifest {
     // log skips by that dir's presence — move the fence so readers
     // fall back to the listing until the next checkpoint re-syncs
     if (removed > beforeVersioned) IndexManifest.bumpFence(spark, path)
-    payloadDir(spark, path).foreach(d =>
+    view.payloadDir.foreach(d =>
       sweep(d, n => n.startsWith("__batch=") &&
         n.stripPrefix("__batch=").toLongOption
           .exists(b => b >= UpdateBase && b - UpdateBase > cur)))
@@ -2813,12 +2750,8 @@ object TableManifest {
       retainMs: Long = 0L): DataFrame = {
     require(maxBatches >= 1 && keepVersions >= 1 && maxDeletes >= 1)
     cleanOrphans(spark, path) // age-guarded: never touches in-flight work
-    def batchCount: Int = payloadDir(spark, path) match {
-      case None => 0
-      case Some(d) => fs(spark, path)
-        .listStatus(new org.apache.hadoop.fs.Path(d))
-        .count(_.getPath.getName.startsWith("__batch="))
-    }
+    def batchCount: Int =
+      viewOf(spark, path).payloadDir.fold(0)(batchIds(spark, _).size)
     val before = batchCount
     val deletesBefore = pendingDeletes(spark, path)
     val compacted = before > maxBatches || deletesBefore >= maxDeletes
@@ -2885,10 +2818,8 @@ object TableManifest {
   def refreshBloomFilters(spark: SparkSession, path: String,
       bloomCols: Seq[String], expectedPerBatch: Long,
       fpp: Double = 0.01, schema: Option[StructType] = None): Unit = {
-    val p = payloadVersion(spark, path).getOrElse(
-      sys.error(s"no committed table at $path"))
-    writeBloomRows(spark, path, p, bloomCols, expectedPerBatch, fpp,
-      schema, batch = None)
+    writeBloomRows(spark, path, currentPayload(spark, path), bloomCols,
+      expectedPerBatch, fpp, schema, batch = None)
   }
 
   /** Upsert ONE batch's Bloom rows into the current payload's artifact
@@ -2898,11 +2829,14 @@ object TableManifest {
   def appendBloomFilters(spark: SparkSession, path: String, batch: Long,
       bloomCols: Seq[String], expectedPerBatch: Long,
       fpp: Double = 0.01, schema: Option[StructType] = None): Unit = {
-    val p = payloadVersion(spark, path).getOrElse(
-      sys.error(s"no committed table at $path"))
-    writeBloomRows(spark, path, p, bloomCols, expectedPerBatch, fpp,
-      schema, batch = Some(batch))
+    writeBloomRows(spark, path, currentPayload(spark, path), bloomCols,
+      expectedPerBatch, fpp, schema, batch = Some(batch))
   }
+
+  /** The current payload version of a table that must exist. */
+  private def currentPayload(spark: SparkSession, path: String): Long =
+    viewOf(spark, path).payload.getOrElse(
+      sys.error(s"no committed table at $path"))
 
   private def writeBloomRows(spark: SparkSession, path: String, p: Long,
       bloomCols: Seq[String], expectedPerBatch: Long, fpp: Double,
@@ -2998,16 +2932,12 @@ object TableManifest {
     val view = viewOf(spark, path)
     val v = view.current.getOrElse(
       sys.error(s"no committed table at $path"))
-    if (columnMapOfV(spark, path, view, v).nonEmpty)
-      return read(spark, path, schema).filter(predicate)
+    def readAll = readView(view, v, schema).filter(predicate)
+    if (view.columnMapAt(v).nonEmpty) return readAll
     val p = view.payloadAt(v).getOrElse(
       sys.error(s"no committed table at $path"))
     val dir = s"$path/data_v$p"
-    val wm = watermarkOfV(spark, path, view, v)
-    val uwm = view.log.infoAt(v).uwm
-    val updV = updateVersionsAtV(spark, path, view, v, dir)
-    val preds = deletePredsOf(spark, path, deleteSegmentsAtV(view, v))
-    def readAll = read(spark, path, schema).filter(predicate)
+    val preds = deletePredsOf(spark, path, view.deleteSegmentsAt(v))
     val bloomPath =
       new org.apache.hadoop.fs.Path(s"$path/bloomstats_v$p")
     val f = fs(spark, path)
@@ -3022,19 +2952,16 @@ object TableManifest {
         (r.getLong(0), hit(bf))
       }.collect().toMap
     if (hits.isEmpty) return readAll // column not covered
-    val payloadBatches = f.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("__batch=") =>
-        n.stripPrefix("__batch=").toLong }
-      .filter(visibleId(_, wm, uwm, updV))
+    val batches = batchIds(spark, dir)
+    val visible = view.visibleAt(v, batches)
     // a batch the artifact does not cover (all-null column, or a write
     // between an append and its refresh) is conservatively read
-    val survivors = payloadBatches
-      .filter(b => hits.getOrElse(b, true))
+    val survivors = batches
+      .filter(b => visible(b) && hits.getOrElse(b, true))
       .map(b => s"$dir/__batch=$b")
     if (survivors.isEmpty) return readAll.filter(lit(false))
     val base = payloadRead(spark, dir, schema, mergeSchema = false,
-      basePath = Some(dir), parts = survivors.toSeq)
+      basePath = Some(dir), parts = survivors)
     maskDeletes(base.filter(predicate), preds, path).drop("__batch")
   }
 
@@ -3065,7 +2992,7 @@ object TableManifest {
       sys.error(s"no committed table at $path"))
     val statsPath = new org.apache.hadoop.fs.Path(s"$path/zonestats_v$p")
     val f = fs(spark, path)
-    if (deleteSegmentsAtV(view, v).nonEmpty) return None
+    if (view.deleteSegmentsAt(v).nonEmpty) return None
     if (!f.exists(statsPath)) return None
     // every column's stats row carries its batch's count; use one column
     val allStats = spark.read.schema(ZoneSchema)
@@ -3076,15 +3003,8 @@ object TableManifest {
     val oneCol = allStats.map(_.getString(0)).min
     val stats = allStats.filter(_.getString(0) == oneCol)
       .map(r => r.getLong(1) -> r.getLong(2)).toMap
-    val wm = watermarkOfV(spark, path, view, v)
-    val uwm = view.log.infoAt(v).uwm
-    val updV = updateVersionsAtV(spark, path, view, v, s"$path/data_v$p")
-    val payloadBatches = f
-      .listStatus(new org.apache.hadoop.fs.Path(s"$path/data_v$p"))
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("__batch=") =>
-        n.stripPrefix("__batch=").toLong }
-      .filter(visibleId(_, wm, uwm, updV))
+    val batches = batchIds(spark, s"$path/data_v$p")
+    val payloadBatches = batches.filter(view.visibleAt(v, batches)(_))
     if (!payloadBatches.forall(stats.contains)) None
     else Some(payloadBatches.map(stats).sum)
   }
@@ -3138,7 +3058,7 @@ object TableManifest {
     * planning-time `sizeInBytes` seed (an upper bound under pruning; the
     * figure that lets Catalyst broadcast a small graft table). */
   def payloadBytes(spark: SparkSession, path: String): Option[Long] =
-    payloadDir(spark, path).map(d =>
+    viewOf(spark, path).payloadDir.map(d =>
       fs(spark, path).getContentSummary(
         new org.apache.hadoop.fs.Path(d)).getLength)
 
@@ -3147,7 +3067,7 @@ object TableManifest {
     * (without it they fall back to the plain filtered read, and a
     * planner should prefer the zone-map range path instead). */
   def hasBloomFilters(spark: SparkSession, path: String): Boolean =
-    payloadVersion(spark, path).exists(p =>
+    viewOf(spark, path).payload.exists(p =>
       fs(spark, path).exists(
         new org.apache.hadoop.fs.Path(s"$path/bloomstats_v$p")))
 
@@ -3353,11 +3273,11 @@ object TableManifest {
     * path (physical file names differ from the logical stats names). */
   def refreshZoneMaps(spark: SparkSession, path: String,
       statsCols: Seq[String], schema: Option[StructType] = None): Unit = {
-    val p = payloadVersion(spark, path).getOrElse(
-      sys.error(s"no committed table at $path"))
+    val view = viewOf(spark, path)
+    val p = view.payload.getOrElse(sys.error(s"no committed table at $path"))
     val dir = s"$path/data_v$p"
     val fromFooters =
-      if (columnMapOf(spark, path).nonEmpty) None
+      if (view.columnMapAt(view.head).nonEmpty) None
       else zoneStatsFromFooters(spark, dir, statsCols,
         schema.getOrElse(
           payloadRead(spark, dir, None, mergeSchema = false).schema))
@@ -3381,12 +3301,13 @@ object TableManifest {
     * passes. */
   def appendZoneMaps(spark: SparkSession, path: String, batch: Long,
       statsCols: Seq[String], schema: Option[StructType] = None): Unit = {
-    val p = payloadVersion(spark, path).getOrElse(
-      sys.error(s"no committed table at $path"))
+    val view = viewOf(spark, path)
+    val p = view.payload.getOrElse(sys.error(s"no committed table at $path"))
     val dir = s"$path/data_v$p"
     val bdir = new org.apache.hadoop.fs.Path(s"$dir/__batch=$batch")
     val fromFooters =
-      if (columnMapOf(spark, path).nonEmpty || !fs(spark, path).exists(bdir))
+      if (view.columnMapAt(view.head).nonEmpty ||
+          !fs(spark, path).exists(bdir))
         None
       else {
         val s0 = schema.getOrElse(
@@ -3453,25 +3374,24 @@ object TableManifest {
     val view = viewOf(spark, path)
     val v = view.current.getOrElse(
       sys.error(s"no committed table at $path"))
-    if (columnMapOfV(spark, path, view, v).nonEmpty) {
-      val plain = read(spark, path, schema)
+    if (view.columnMapAt(v).nonEmpty) {
+      val plain = readView(view, v, schema)
       return plain.filter(rangePredicate(plain.schema))
     }
     val p = view.payloadAt(v).getOrElse(
       sys.error(s"no committed table at $path"))
     val dir = s"$path/data_v$p"
     val f = fs(spark, path)
-    val wm = watermarkOfV(spark, path, view, v)
-    val uwm = view.log.infoAt(v).uwm
-    val updV = updateVersionsAtV(spark, path, view, v, dir)
-    val delPreds = deletePredsOf(spark, path, deleteSegmentsAtV(view, v))
+    val batches = batchIds(spark, dir)
+    val visible = view.visibleAt(v, batches)
+    val delPreds = deletePredsOf(spark, path, view.deleteSegmentsAt(v))
     val statsPath = new org.apache.hadoop.fs.Path(s"$path/zonestats_v$p")
     lazy val payloadSchema =
       payloadRead(spark, dir, schema, mergeSchema = false).schema
     val predicate = rangePredicate(schema.getOrElse(payloadSchema))
     def readAll = maskDeletes(
       payloadRead(spark, dir, schema, mergeSchema = false)
-        .filter(visibleBatch(wm, uwm, updV)).filter(predicate),
+        .filter(visible.column).filter(predicate),
       delPreds, path).drop("__batch")
     if (!f.exists(statsPath)) return readAll
     // a batch is excluded only when SOME queried column's stats row
@@ -3486,18 +3406,13 @@ object TableManifest {
       .select(col("__batch")).distinct()
       .collect().map(_.getLong(0)).toSet
     if (excluded.isEmpty) return readAll
-    // shallow child listing (one RPC) → surviving partition dirs; the
+    // the shallow child listing above → surviving partition dirs; the
     // recursive FILE listing then touches only those
-    val survivors = f.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("__batch=") =>
-        n.stripPrefix("__batch=").toLong }
-      .filter(visibleId(_, wm, uwm, updV))
-      .filterNot(excluded)
+    val survivors = batches.filter(b => visible(b) && !excluded(b))
       .map(b => s"$dir/__batch=$b")
     if (survivors.isEmpty) return readAll.filter(lit(false))
     val base = payloadRead(spark, dir, schema, mergeSchema = false,
-      basePath = Some(dir), parts = survivors.toSeq)
+      basePath = Some(dir), parts = survivors)
     maskDeletes(base.filter(predicate), delPreds, path).drop("__batch")
   }
 }

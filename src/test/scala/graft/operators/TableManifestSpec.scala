@@ -166,8 +166,8 @@ class TableManifestSpec extends AnyFunSuite {
     // an insert-only mergeWhere commits a replacement batch with a
     // kind=merge marker but NO segment dir — without batch-aware pin
     // protection, vacuum reclaimed that marker and the pinned read
-    // silently dropped the merge's rows (updateVersionsAt filters
-    // batches by their marker's kind)
+    // silently dropped the merge's rows (reads serve an update batch
+    // only by its marker's kind)
     val path = Files.createTempDirectory("tm_vac_mrgpin").toString
     TableManifest.commitSnapshot(
       df((0L until 5L).map(i => (i, "b")): _*), path)
@@ -1156,4 +1156,90 @@ class TableManifestSpec extends AnyFunSuite {
     intercept[Exception](TableManifest.readAt(s, path, reclaimed.head))
     assert(ids(TableManifest.read(s, path)) == (2L to 35L).toSet)
   }
+
+  test("metadata traffic: checkpoint and marker bodies opened per " +
+    "operation, with and without a checkpoint") {
+    s.sparkContext.hadoopConfiguration.set("fs.countfs.impl",
+      classOf[ManifestOpenCountingFs].getName)
+    // snapshot + four keyed appends (versions 0-4), optionally
+    // checkpointed at the head — short of the 32-commit interval, so
+    // the plain table never writes one
+    def table(checkpointed: Boolean): String = {
+      val path = "countfs://" + Files.createTempDirectory("tm_traffic")
+      // the countfs scheme is the local filesystem's rename under
+      // another name: the verified rename store applies
+      CommitStore.installForTest(
+        new org.apache.hadoop.fs.Path(path).toString, RenameCommitStore)
+      TableManifest.commitSnapshot(df(0L -> "s"), path)
+      (0L until 4L).foreach(b =>
+        TableManifest.append(df((b + 1) -> "k"), path, batchId = Some(b)))
+      if (checkpointed) TableManifest.checkpointManifest(s, path)
+      path
+    }
+    def opens(op: => Unit): (Long, Long) = {
+      ManifestOpenCountingFs.reset()
+      op
+      (ManifestOpenCountingFs.checkpointOpens.get,
+        ManifestOpenCountingFs.markerOpens.get)
+    }
+    def traffic(path: String): Map[String, (Long, Long)] = Map(
+      "keyed append" -> opens(
+        TableManifest.append(df(10L -> "x"), path, batchId = Some(4L))),
+      "unkeyed append" -> opens(TableManifest.append(df(11L -> "y"), path)),
+      "deleteWhere" -> opens(TableManifest.deleteWhere(s, path, "id = 1")),
+      "readRange" -> opens(TableManifest.readRange(s, path,
+        Seq(("id", 0L, 100L))).count()))
+    // (checkpoint body opens, marker body opens) — a marker body is read
+    // only when a version question needs it (the payload's own marker
+    // included: it must be a snapshot's), once per View; the checkpoint
+    // serves every version it holds
+    try {
+      val checkpointed = table(checkpointed = true)
+      val plain = table(checkpointed = false)
+      val ckptTraffic = traffic(checkpointed)
+      val plainTraffic = traffic(plain)
+      assert(ckptTraffic == Map("keyed append" -> (2L, 0L),
+        "unkeyed append" -> (2L, 2L), "deleteWhere" -> (3L, 3L),
+        "readRange" -> (1L, 1L)), s"checkpointed: $ckptTraffic")
+      assert(plainTraffic == Map("keyed append" -> (0L, 4L),
+        "unkeyed append" -> (0L, 4L), "deleteWhere" -> (0L, 5L),
+        "readRange" -> (0L, 2L)), s"no checkpoint: $plainTraffic")
+      Seq(checkpointed, plain).foreach(p => assert(
+        ids(TableManifest.read(s, p)) == Set(0L, 2L, 3L, 4L, 10L, 11L)))
+    } finally CommitStore.clearTestStores()
+  }
+}
+
+/** The local filesystem under its own `countfs` scheme, counting opens of
+  * manifest checkpoint bodies (`manifest/ckpt_v<N>`) and marker bodies
+  * (`manifest/v<N>`). Only `countfs://` paths pass through it, so every
+  * other suite keeps the plain local filesystem. */
+class ManifestOpenCountingFs extends org.apache.hadoop.fs.LocalFileSystem(
+    new org.apache.hadoop.fs.RawLocalFileSystem {
+      override def getUri: java.net.URI = ManifestOpenCountingFs.Uri
+    }) {
+  override def getScheme: String = ManifestOpenCountingFs.Uri.getScheme
+  override def open(f: org.apache.hadoop.fs.Path,
+      bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    ManifestOpenCountingFs.record(f)
+    super.open(f, bufferSize)
+  }
+}
+
+object ManifestOpenCountingFs {
+  val Uri: java.net.URI = java.net.URI.create("countfs:///")
+  val checkpointOpens, markerOpens =
+    new java.util.concurrent.atomic.AtomicLong
+  private val Checkpoint = "ckpt_v\\d+".r
+  private val Marker = "v\\d+".r
+
+  def reset(): Unit = { checkpointOpens.set(0L); markerOpens.set(0L) }
+
+  def record(p: org.apache.hadoop.fs.Path): Unit =
+    if (Option(p.getParent).exists(_.getName == "manifest"))
+      p.getName match {
+        case Checkpoint() => checkpointOpens.incrementAndGet()
+        case Marker() => markerOpens.incrementAndGet()
+        case _ =>
+      }
 }
